@@ -1,25 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Benchmark entrypoint: times every SparkEntry query at the given scale
   * factor and prints one JSON line. local[32] matches the driver's bench
   * environment; a warmup pass separates JVM/codegen startup cost from
   * per-query numbers. */
 object Bench {
-
-  /** Spark-4-on-JDK-17 module opens for the recheck child process (the
-    * same list build.sbt forks with — JavaModuleOptions.defaultModuleOptions). */
-  private val jdk17AddOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   /** 1-minute system load average (/proc/loadavg field 1) — recorded at
     * the run's checkpoints so a graded artifact taken on a busy host
@@ -52,34 +40,15 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(32)
     // Child mode (SPARK_GRAFT_CHILD): this JVM is the separate-process
     // re-measure a parent run forked for its flagged outliers. Lean path:
     // inline best-of-2/3 only — no second sweep, no sentinels, no
     // recursive recheck. A fresh process is the point: it shares no GC
     // history, no cache state, and no JIT profile with the parent sweep.
     val child = sys.env.contains("SPARK_GRAFT_CHILD")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor (guide §2.2): the default 1 MiB
-      // minPartitionSize is a bytes-per-task floor, and bytes are a poor
-      // proxy for CPU at this scale — sf0.1's CPU-dense stages (decimal
-      // window frames, minhash signature aggs) run ~1 CPU-second per MiB,
-      // so the 1 MiB floor coalesced them to 1-3 tasks on a 32-core host
-      // (measured: q150 2.33s → 0.71s, q45 2.56s → 1.68s at 16 KiB). The
-      // floor only binds on small shuffles — at cluster scale the 64 MiB
-      // advisory size governs and this setting is inert. Env-overridable
-      // for other deployments.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE_BYTES", "16384"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Loud schema gate (same as Verify): testdata drift should announce
     // itself up front, not as a wall of -1s at the end of the sweep. The
@@ -191,11 +160,9 @@ object Bench {
     // Cross-round prior record + cpu-configuration gate: computed ONCE —
     // they don't change between requeue attempts.
     val prior = if (child) Map.empty[String, Double] else priorRecord()
-    // cpus parsed NUMERICALLY: an equivalent spelling ("32 ", "032") must
-    // not silently disable the absolute bands — and when they ARE skipped
-    // (non-32 configuration), the record says so on stderr.
-    val cpusInt = cpus.trim.toIntOption
-    if (!child && !cpusInt.contains(32)) System.err.println(
+    // The absolute sentinel bands are calibrated at 32 cores; when they
+    // are skipped, the record says so on stderr.
+    if (!child && cpus != 32) System.err.println(
       s"[bench] absolute sentinel bands skipped: cpus=$cpus is not the " +
         "calibrated 32-core configuration")
 
@@ -276,14 +243,18 @@ object Bench {
         val javaBin = s"${System.getProperty("java.home")}/bin/java"
         val cp = System.getProperty("java.class.path")
         val xmx = s"-Xmx${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}"
-        val cmd = (Seq(javaBin) ++ jdk17AddOpens ++
-          Seq(xmx, "-Dspark.ui.enabled=false", "-cp", cp, "graft.Bench"))
+        // Spark 4 on JDK 17 needs the module opens build.sbt forks this
+        // JVM with; the child inherits them from the running JVM.
+        val addOpens = java.lang.management.ManagementFactory.getRuntimeMXBean
+          .getInputArguments.asScala.filter(_.startsWith("--add-opens"))
+        val cmd = Seq(javaBin) ++ addOpens ++
+          Seq(xmx, "-cp", cp, "graft.Bench")
         val pb = new ProcessBuilder(cmd: _*)
         pb.environment().put("SPARK_GRAFT_CHILD", "1")
         pb.environment().put("SPARK_GRAFT_ONLY",
           flagged.map(f => short(f._1)).mkString(","))
         pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-        pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+        pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
         pb.redirectError(ProcessBuilder.Redirect.INHERIT) // diag to stderr
         val proc = pb.start()
         val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
@@ -314,7 +285,7 @@ object Bench {
     // a cleanliness gate.
     val contaminated = (!child && (
       sens.max > 2.5 * sens.min || senShuf.max > 2.5 * senShuf.min ||
-      (cpusInt.contains(32) && (sens.min > 0.75 || senShuf.min > 3.0)))) ||
+      (cpus == 32 && (sens.min > 0.75 || senShuf.min > 3.0)))) ||
       (forceFirstDirty && attemptNo == 1)
     Sweep(results, sens, senShuf, loads, flagged, contaminated)
     }
@@ -336,7 +307,7 @@ object Bench {
     // 5-second samples below it — by then the decay has flushed through
     // and what remains is other processes.
     def waitForQuiet(maxWaitMs: Long): Long = {
-      val threshold = math.max(4.0, cpusInt.getOrElse(32) / 8.0)
+      val threshold = math.max(4.0, cpus / 8.0)
       val t0 = System.currentTimeMillis()
       var below = 0
       var l = loadavg()

@@ -1,153 +1,14 @@
 package graft
-import graft.CacheLifecycle.TrackedPersistOps
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-/** Dev utility: time queries (args = names) or dump plans (-plan name). */
+
+/** Dev utility: time queries (args = names), or one of the generic modes
+  * `-plan`, `-planexec`, `-prof`, `-phases`, `-sqlprof`, `-conf`, `-wsc`
+  * followed by query names. */
 object QTime {
   def main(args: Array[String]): Unit = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE_BYTES", "16384"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession(32)
     spark.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    def time[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"STAGE $label: ${(System.nanoTime()-t0)/1e9}%.2f s"); r
-    }
-    if (args.headOption.contains("-q45stages")) {
-      val docs = Tables.documents(spark, d)
-      // the OPERATOR's shingle pipeline, not a copy — staged timings must
-      // measure what q45 actually runs
-      val shingleRows = operators.Dedup.shingleHashRows(docs, "doc_id", "text", 3)
-      time("shingleRows count")(println("n=" + shingleRows.count()))
-      val sigCols = (0 until 64).map(i => min(xxhash64(lit(i), col("h"))).as(s"m$i"))
-      val sigsOnly = shingleRows.groupBy("doc_id").agg(sigCols.head, sigCols.tail: _*)
-      time("sigs-only (codegen)")(sigsOnly.count())
-      val setOnly = shingleRows.groupBy("doc_id").agg(collect_set(col("h")).as("sh"))
-      time("collect_set-only")(setOnly.count())
-      val combined = shingleRows.groupBy("doc_id")
-        .agg(collect_set(col("h")).as("sh"), sigCols: _*)
-      time("combined agg")(combined.count())
-      val full = operators.Dedup.nearDuplicatePairs(docs, "doc_id", "text", 3, 0.6)
-      time("full q45")(full.count())
-    } else if (args.headOption.contains("-q56stages")) {
-      val emb = Tables.embeddings(spark, d)
-      val pairs = operators.Similarity.lshSimilarPairs(emb, 0.4,
-        numTables = 6, planesPerTable = 5)
-      time("lsh pairs")(println("pairs=" + pairs.count()))
-      val pairs2 = operators.Similarity.lshSimilarPairs(emb, 0.4,
-          numTables = 6, planesPerTable = 5)
-        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")).persistTracked()
-      time("lsh pairs persisted")(println("pairs=" + pairs2.count()))
-      time("clusterPairs on persisted")(
-        println("rows=" + operators.Dedup.clusterPairs(pairs2).count()))
-      val full = queries.Vectors.q56(spark, d)
-      time("full q56")(println("rows=" + full.count()))
-    } else if (args.headOption.contains("-q49stages")) {
-      val li = Tables.lineitem(spark, d)
-      time("scan+groupBy(v) count")(
-        println("groups=" + li.groupBy(col("l_extendedprice")).count().count()))
-      val byVal = li.groupBy(col("l_extendedprice").as("v"))
-        .agg(count(lit(1)).as("c")).persistTracked()
-      time("byVal persist")(println("n=" + byVal.count()))
-      val bounds = byVal.agg(min(col("v")).as("lo"), max(col("v")).as("hi"))
-      time("bounds")(bounds.collect())
-      val sliced = byVal.crossJoin(broadcast(bounds))
-        .withColumn("slice",
-          least(floor((col("v") - col("lo")) / ((col("hi") - col("lo")) / 64)),
-            lit(63)).cast("int"))
-      time("sliced count")(sliced.count())
-      val wLocal = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("slice")).orderBy(col("v"))
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      time("local window")(sliced.withColumn("lc", sum(col("c")).over(wLocal)).count())
-      time("full q49")(queries.Extended.q49(spark, d).count())
-      time("full q49 again")(queries.Extended.q49(spark, d).count())
-    } else if (args.headOption.contains("-q231dbg")) {
-      // same builder as q231 — the shared persistent artifact cannot
-      // diverge between the query and this probe
-      val staged = queries.Events.lateSplitStage(spark, d)
-      println("files: " + java.nio.file.Files.list(staged).toArray.toSeq)
-      val stream = graft.streaming.Streams.eventsStream(spark, staged.toString,
-        glob = "*.parquet", maxFilesPerTrigger = Some(1))
-      val hourly = stream
-        .withWatermark("ts_us", "2 hours")
-        .groupBy(window(col("ts_us"), "1 hour").as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"))
-      val (res, progress) = graft.streaming.Streams.runToMemoryTracked(
-        spark, hourly, "dbg_sink",
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      progress.foreach { pr =>
-        println(s"batch=${pr.batchId} rows=${pr.numInputRows} " +
-          s"wm=${pr.eventTime.get("watermark")} " +
-          pr.stateOperators.map(so =>
-            s"dropped=${so.numRowsDroppedByWatermark} total=${so.numRowsTotal}")
-            .mkString(","))
-      }
-      println("result rows=" + res.count())
-      println("result sum=" + res.agg(sum(col("n_events"))).head.getLong(0))
-      val ev = Tables.events(spark, d)
-      val maxOldNs = ev.filter(col("event_id") % 2 === 0 &&
-          expr("ts div 1000000000 div 86400") < 19743)
-        .agg(max(col("ts"))).head.getLong(0)
-      val maxNs = ev.agg(max(col("ts"))).head.getLong(0)
-      val w1 = maxOldNs / 1000000L - 7200000L // wm during the odd batch
-      val w2 = maxNs / 1000000L - 7200000L    // final wm
-      val hours = ev.select(
-        (expr("ts div 1000000000 div 3600") * 3600000L).as("hstartMs"),
-        (col("event_id") % 2).as("par"))
-      val closed = hours.filter(col("hstartMs") + 3600000L <= w2)
-      println("evens-only-closed=" + closed.filter(col("par") === 0).count())
-      println("merged-closed=" + closed.count())
-      println("drop-model=" + closed.filter(col("par") === 0 ||
-        col("hstartMs") + 3600000L > w1).count())
-    } else if (args.headOption.contains("-q58prof")) {
-      // profile the streaming floor: per-batch durations of the q58 drain
-      for (i <- 1 to 2) {
-        val t0 = System.nanoTime()
-        val joined = streaming.Streams.viewPurchaseIntervalJoin(spark, d)
-        val t1 = System.nanoTime()
-        val (_, prog) = streaming.Streams.runToMemoryTracked(spark, joined,
-          "q58prof_sink", org.apache.spark.sql.streaming.OutputMode.Append())
-        val t2 = System.nanoTime()
-        println(f"RUN$i plan=${(t1 - t0) / 1e9}%.2f drain=${(t2 - t1) / 1e9}%.2f")
-        prog.foreach { p =>
-          println(s"  batch ${p.batchId}: total=${p.batchDuration}ms " +
-            s"durations=${p.durationMs}")
-        }
-      }
-    } else if (args.headOption.contains("-q339dbg")) {
-      import graft.CacheLifecycle.TrackedPersistOps
-      val pairs = operators.Similarity.lshSimilarPairs(Tables.embeddings(spark, d),
-          threshold = 0.3, numTables = 6, planesPerTable = 5,
-          eagerSkewProbe = true)
-        .persistTracked()
-      time("pairs count (build cache)")(println("pairs=" + pairs.count()))
-      time("pairs count again")(pairs.count())
-      val ts = Seq(0.3, 0.4, 0.5)
-      ts.foreach(t => time(s"count >= $t")(
-        println(s"  t=$t n=" + pairs.filter(col("sim") >= t).count())))
-      val keyed = ts.zipWithIndex.map { case (t, i) =>
-        pairs.filter(col("sim") >= t)
-          .select((col("vec_a") * 4 + i).as("doc_a"), (col("vec_b") * 4 + i).as("doc_b"))
-      }.reduce(_ unionByName _)
-      time("keyed count")(println("keyed=" + keyed.count()))
-      time("clusterPairs")(
-        println("cc rows=" + operators.Dedup.clusterPairs(keyed).count()))
-      time("clusterPairs again")(
-        println("cc rows=" + operators.Dedup.clusterPairs(keyed).count()))
-      time("clusterPairs coalesce32")(println("cc rows=" +
-        operators.Dedup.clusterPairs(keyed.coalesce(32)).count()))
-      time("clusterPairs coalesce8")(println("cc rows=" +
-        operators.Dedup.clusterPairs(keyed.coalesce(8)).count()))
-      time("clusterPairs coalesce8 again")(println("cc rows=" +
-        operators.Dedup.clusterPairs(keyed.coalesce(8)).count()))
-    } else if (args.headOption.contains("-wsc")) {
+    if (args.headOption.contains("-wsc")) {
       // Whole-stage-codegen sensitivity: time each query with
       // spark.sql.codegen.wholeStage on vs off (warm, best of 2).
       spark.range(100000).count()
@@ -251,46 +112,6 @@ object QTime {
           walk(g.allNodes.toSeq)
         }
       }
-    } else if (args.headOption.contains("-q271dbg")) {
-      import graft.CacheLifecycle.TrackedPersistOps
-      val big = "decimal(38,0)"
-      val x = Tables.embeddings(spark, d)
-        .select(col("vec_id"), posexplode(expr("transform(embedding, v -> cast(v as double))")).as(Seq("i", "v")))
-        .select(col("vec_id"), col("i"),
-          (col("v").cast("decimal(18,9)") * 1000000000L).cast("long").as("xe"))
-      val mu = x.groupBy(col("i")).agg(expr("sum(xe) div count(1)").as("mu"))
-      val c = x.join(broadcast(mu), "i")
-        .select(col("vec_id"), col("i"), (col("xe") - col("mu")).as("ce"))
-        .persistTracked()
-      val cov = c.as("a").join(c.as("b"), col("a.vec_id") === col("b.vec_id"))
-        .groupBy(col("a.i").as("i"), col("b.i").as("j"))
-        .agg(expr(s"cast(sum(cast(a.ce as $big) * cast(b.ce as $big))" +
-          " div count(1) as bigint)").as("m"))
-        .persistTracked()
-      time("cov first count")(println("cov rows=" + cov.count()))
-      time("cov second count")(cov.count())
-      val v0 = mu.select(col("i").as("j"), lit(1000000000L).as("ve"))
-        .localCheckpoint(true)
-      time("step1 raw")(cov.join(broadcast(v0), "j").groupBy(col("i"))
-        .agg(sum(col("m").cast(big) * col("ve").cast(big)).as("raw"))
-        .localCheckpoint(true))
-      time("step2 raw")(cov.join(broadcast(v0), "j").groupBy(col("i"))
-        .agg(sum(col("m").cast(big) * col("ve").cast(big)).as("raw"))
-        .localCheckpoint(true))
-      time("join-only count")(cov.join(broadcast(v0), "j").count())
-      time("join-only count 2")(cov.join(broadcast(v0), "j").count())
-      time("long agg")(cov.join(broadcast(v0), "j").groupBy(col("i"))
-        .agg(sum(col("m")).as("raw")).localCheckpoint(true))
-      time("long agg 2")(cov.join(broadcast(v0), "j").groupBy(col("i"))
-        .agg(sum(col("m")).as("raw")).localCheckpoint(true))
-      time("dec38 agg no join")(cov.groupBy(col("i"))
-        .agg(sum(col("m").cast(big) * col("m").cast(big)).as("raw"))
-        .localCheckpoint(true))
-      time("dec38 agg no join 2")(cov.groupBy(col("i"))
-        .agg(sum(col("m").cast(big) * col("m").cast(big)).as("raw"))
-        .localCheckpoint(true))
-      time("collect cov")(println("n=" + cov.collect().length))
-      time("collect cov 2")(println("n=" + cov.collect().length))
     } else if (args.headOption.contains("-prof")) {
       // Per-query job/stage profile: the local[32] stand-in for the Spark
       // UI's stage table (guide §1/§7). One warm run, then a profiled run

@@ -1,33 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // Pin the JVM default zone too: driver-side java.sql.Timestamp
-    // construction must agree with the UTC-pinned Spark session.
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
     val Array(sfDir, outDir, rest @ _*) = args
     // Optional trailing args: run only these query names (local fast loop);
     // the driver passes exactly two args and gets the full suite.
     val only = rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // config parity with Bench: correctness is verified under the same
-      // AQE coalescing floor the bench times (results are partitioning-
-      // independent by the repo's determinism conventions; this gate is
-      // what re-proves that each round)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE_BYTES", "16384"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // The custom optimizer rules must be live in the oracle-checked path,
-      // not only in their specs — the queries are verified WITH them on.
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // The bench's session config (GraftSession): results are partitioning-
+    // independent by the repo's determinism conventions, and this gate is
+    // what re-proves that each round.
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt).getOrElse(4)
+    val spark = GraftSession(cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Loud schema gate: a testdata regeneration that changes a table's

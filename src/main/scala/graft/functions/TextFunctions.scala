@@ -25,25 +25,9 @@ object TextFunctions {
     * are oracle-checkable (unlike xxhash64, which only Spark has). */
   def fingerprint(c: Column): Column = md5(normalizeText(c))
 
-  /** Distinct k-word shingles of a token array; empty when the document is
-    * shorter than k tokens (guarded — sequence(1, n) with n < 1 would
-    * generate a *descending* range, not an empty one). */
-  def wordShingles(toks: Column, k: Int): Column =
-    when(size(toks) >= k,
-      array_distinct(transform(sequence(lit(1), size(toks) - (k - 1)),
-        i => concat_ws(" ", slice(toks, i, lit(k))))))
-      .otherwise(array().cast("array<string>"))
-
   /** Exact Jaccard similarity of two distinct-element arrays. */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(a, b))
     inter * lit(1.0) / (size(a) + size(b) - inter)
   }
-
-  /** Hamming distance between two 64-bit hashes (e.g. SimHash sketches
-    * from graft.operators.Dedup — built there with explode + aggregation,
-    * not per-row array lambdas, which are CodegenFallback and 10-50x
-    * slower at scale). */
-  def hammingDistance(a: Column, b: Column): Column =
-    bit_count(a.bitwiseXOR(b))
 }

@@ -33,32 +33,4 @@ object VectorFunctions {
 
   def cosineSimilarity(a: Column, b: Column): Column =
     dotProduct(a, b) / (l2Norm(a) * l2Norm(b))
-
-  /** Unit-normalized copy of the vector (zero vectors → nulls inside). */
-  def l2Normalize(a: Column): Column = {
-    val n = l2Norm(a)
-    transform(asDouble(a), x => x / n)
-  }
-
-  def euclideanDistance(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(asDouble(a), asDouble(b), (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, x) => acc + x))
-
-  /** Random-hyperplane signature for cosine LSH: bit p = sign of the dot
-    * product with pseudo-random hyperplane p. Hyperplane components are
-    * derived deterministically from (plane, dim) hashes, so executors agree
-    * without broadcasting plane matrices. Returns an array<int> of 0/1.
-    * Charikar (2002) SimHash for angles. */
-  def hyperplaneSignature(v: Column, planes: Int): Column =
-    transform(sequence(lit(0), lit(planes - 1)), p => {
-      val dims = sequence(lit(0), size(v) - 1)
-      val dot = aggregate(dims, lit(0.0), (acc, i) =>
-        acc + element_at(asDouble(v), i + 1) *
-          (pmod(xxhash64(p, i), lit(2000001L)).cast("double") / 1000000.0 - 1.0))
-      when(dot > 0, 1).otherwise(0)
-    })
-
-  /** Pack a 0/1 signature array into a long bucket key (≤ 63 planes). */
-  def signatureKey(sig: Column): Column =
-    aggregate(sig, lit(0L), (acc, bit) => acc * 2L + bit)
 }

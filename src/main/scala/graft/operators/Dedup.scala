@@ -654,8 +654,6 @@ object Dedup {
         .filter(col("a") =!= col("b"))
         .localCheckpoint(true)
       iter += 1
-      if (sys.env.contains("GRAFT_CLUSTER_DEBUG"))
-        println(s"[cluster] iter=$iter residual_edges=${edges.count()}")
     }
     // The operator's contract is EXACT components — a capped-out loop would
     // silently emit wrong clusters (and a hash mismatch downstream nobody

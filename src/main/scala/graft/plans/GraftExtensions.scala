@@ -5,15 +5,13 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: makes the engine's custom Catalyst
-  * expressions available to ANY session created with
+  * expressions, optimizer rule and planner strategy available to any
+  * session created with
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
-  * or
   *   --conf spark.sql.extensions=graft.plans.GraftExtensions
   *
   * (the cluster-wide registration path — no driver code changes needed on
-  * a shared cluster). Per-session registration is also available via
-  * VectorExpressions.register(spark).
+  * a shared cluster). graft.GraftSession sets it for every engine session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -63,9 +63,4 @@ object VectorExpressions {
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(DotProductDouble(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Make `dot_product(a, b)` callable from spark.sql text. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProductDouble(exprs.head, exprs(1)), "built-in")
 }

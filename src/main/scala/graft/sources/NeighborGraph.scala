@@ -829,21 +829,13 @@ object NeighborGraph {
       entries: Seq[Long],
       arms: Option[Seq[(String, DataFrame)]]): Seq[DataFrame] = {
     import spark.implicits._
-    val prof = sys.env.contains("GRAFT_NNG_PROF")
-    def t[T](name: String)(f: => T): T =
-      if (!prof) f else {
-        val t0 = System.nanoTime(); val res = f
-        System.err.println(
-          f"[nng] $name: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        res
-      }
     // Materialize the queries ONCE (bounded by the probe-batch contract).
-    val qRows: Array[(Long, Array[Double], Double)] = t("qCollect") { queries
+    val qRows: Array[(Long, Array[Double], Double)] = queries
       .select(col("vec_id").as("query_id"),
         asDouble(col("embedding")).as("q_emb"),
         l2Norm(col("embedding")).as("q_nrm"))
       .collect()
-      .map(x => (x.getLong(0), x.getSeq[Double](1).toArray, x.getDouble(2))) }
+      .map(x => (x.getLong(0), x.getSeq[Double](1).toArray, x.getDouble(2)))
 
     // Scoring happens on the DRIVER over the collected candidate vectors
     // (bounded by frontier·m rows — the same rows a join-side plan would
@@ -889,9 +881,9 @@ object NeighborGraph {
         visited += (qid, dst) -> round6(dot(qe, e) / (qn * n))
       }
     def drain(df: DataFrame): Array[(Long, Long, Array[Double], Double)] =
-      t("drain")(df.collect().map(x =>
+      df.collect().map(x =>
         (x.getLong(0), x.getLong(1), x.getSeq[Double](2).toArray,
-          x.getDouble(3))))
+          x.getDouble(3)))
     def beamOf(beamWidth: Int): Seq[(Long, Long)] =
       visited.toSeq.groupBy(_._1._1).toSeq.flatMap { case (_, ent) =>
         ent.sortBy { case ((_, node), sim) => (-sim, node) }
@@ -904,7 +896,7 @@ object NeighborGraph {
         // session; rounds filter this relation (planning-time pruning
         // still applies — the filters are literal).
         val edges = edgesByPath.getOrElseUpdate(ph.edgesPath,
-          t("readEdges")(spark.read.parquet(ph.edgesPath)))
+          spark.read.parquet(ph.edgesPath))
         // Driver adjacency cache (per path — relations differ): each src's
         // out-edges are READ once however many queries' beams — across
         // every walk of the session — pass through it; later rounds and
@@ -971,7 +963,6 @@ object NeighborGraph {
           r += 1
         }
       }
-      if (prof) System.err.println(s"[nng] visited total: ${visited.size}")
       visited
     }
     def topK(vis: Map[(Long, Long), Double],

@@ -1,17 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.AsOfJoin
 
 class AsOfJoinSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession(4)
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -37,8 +31,6 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("native as-of exec equals the window-based q29 lookup on real events") {
     import spark.implicits._
-    // public no-extensions registration path for the planner strategy
-    spark.experimental.extraStrategies = Seq(graft.plans.AsOfJoinStrategy)
     val ev = Tables.events(spark, sf)
     val purchases = ev.filter($"event_type" === "purchase")
       .select($"event_id", $"user_id", $"ts")
@@ -60,7 +52,6 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("native as-of edge cases: no prior match, inclusive ties, empty right") {
     import spark.implicits._
-    spark.experimental.extraStrategies = Seq(graft.plans.AsOfJoinStrategy)
     val left = Seq((1L, 100L), (1L, 200L), (2L, 50L), (3L, 10L))
       .toDF("k", "t")
     val right = Seq((1L, 100L, "tie"), (1L, 150L, "mid"), (2L, 60L, "late"))
@@ -81,7 +72,6 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("native as-of equals composed as-of on random data") {
     import spark.implicits._
-    spark.experimental.extraStrategies = Seq(graft.plans.AsOfJoinStrategy)
     val rnd = new scala.util.Random(42)
     val left = Seq.fill(400)((rnd.nextInt(20).toLong, rnd.nextInt(1000).toLong))
       .zipWithIndex.map { case ((k, t), i) => (i.toLong, k, t) }
@@ -103,7 +93,6 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("native as-of over bucketed tables plans zero exchanges") {
     import spark.implicits._
-    spark.experimental.extraStrategies = Seq(graft.plans.AsOfJoinStrategy)
     val ev = Tables.events(spark, sf)
     val purchases = ev.filter($"event_type" === "purchase")
       .select($"event_id", $"user_id", $"ts")
@@ -138,7 +127,6 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("native as-of realigns children arriving with different partitionings") {
     import spark.implicits._
-    spark.experimental.extraStrategies = Seq(graft.plans.AsOfJoinStrategy)
     // Left arrives hash-partitioned on the WRONG key at a non-default
     // partition count; right arrives range-partitioned on time. Neither
     // satisfies ClusteredDistribution(k), so EnsureRequirements must insert

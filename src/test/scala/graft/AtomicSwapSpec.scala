@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -82,12 +81,7 @@ class AtomicSwapSpec extends AnyFunSuite {
   }
 
   test("interrupted NeighborGraph.delete is healed by the next delete call") {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(4)
     import spark.implicits._
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val p = TempDirs.fresh("graft_nng_swapcrash")

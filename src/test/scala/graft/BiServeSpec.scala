@@ -2,7 +2,6 @@ package graft
 
 import java.sql.DriverManager
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.BiServe
 
@@ -13,12 +12,7 @@ import graft.etl.BiServe
   * aggregate over JDBC returns exactly what the in-process DataFrame API
   * returns. */
 class BiServeSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession(4)
 
   test("Thrift JDBC endpoint serves catalog tables to a live BI client") {
     val sf = "/root/testdata/sf0.001"

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * operator's output is materialized — a long-lived session (Verify's
   * 132-query sweep, BiServe) must not accumulate cached stages. */
 class CacheLifecycleSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession(4)
 
   private val sf = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 import graft.operators.Dedup
@@ -24,12 +23,7 @@ object DedupProps extends Properties("graft.dedup") {
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
     p.withMinSuccessfulTests(12)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession(4)
 
   // 3-8 tokens from a 6-word vocabulary: dense overlap, frequent ties
   private val docGen: Gen[String] = Gen.chooseNum(3, 8).flatMap { n =>

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.forAll
 import graft.etl.{Schemas, Upsert}
@@ -12,12 +11,7 @@ import graft.operators.Dedup
   * invariants over arbitrary generated batches. */
 object EtlProps extends Properties("graft.etl") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession(4)
 
   private val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
 

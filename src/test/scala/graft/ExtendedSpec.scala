@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,12 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracle can't see — built-in agreement for the closed-form statistics,
   * pivot/unpivot inversion, and sample-rate sanity. */
 class ExtendedSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession(4)
 
   private val sf = "/root/testdata/sf0.001"
 

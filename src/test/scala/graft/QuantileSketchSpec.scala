@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -102,12 +101,7 @@ class QuantileSketchSpec extends AnyFunSuite {
     targets(merged.n).foreach(t => assert(rankWithin(all, merged, t), s"target=$t"))
   }
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = GraftSession(4)
 
   test("sketch survives a Spark aggregation round-trip (kryo buffer)") {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Similarity, Skew}
 
@@ -11,7 +11,8 @@ import graft.operators.{Dedup, Similarity, Skew}
   * Flags: `--rs 1,10,30` replica counts; `--ops a,b|all` operator subset;
   * `--partitions N` shuffle-partition override (scale-out stand-in: on a
   * real cluster partitions grow with data, on local[32] they are pinned
-  * unless overridden); `--hot-only` / `--skip-hot` for the hot-bucket
+  * unless overridden); `--coalesce false` turns off AQE partition
+  * coalescing; `--hot-only` / `--skip-hot` for the hot-bucket
   * comparison. Heap via SPARK_DRIVER_MEM (build.sbt, default 8g).
   *
   * Corpus scaling uses similarity-PRESERVING, cross-replica-DISJOINT
@@ -56,23 +57,16 @@ object ScaleStress {
   }
 
   def main(args: Array[String]): Unit = {
-    java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
     val partitions = flag(args, "--partitions").getOrElse("32")
     val rs = flag(args, "--rs").getOrElse("1,10,30").split(",").map(_.trim.toInt).toSeq
     val opsSel = flag(args, "--ops").getOrElse("all")
     val hotOnly = args.contains("--hot-only")
     val skipHot = args.contains("--skip-hot")
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", partitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        flag(args, "--coalesce").getOrElse("true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(32)
+    spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled",
+      flag(args, "--coalesce").getOrElse("true"))
     spark.sparkContext.setLogLevel("WARN")
     val sf = "/root/testdata/sf0.1"
     val out = "target/scale"

@@ -1,16 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, Similarity}
 
 class SimilaritySpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession(4)
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -172,8 +167,7 @@ class SimilaritySpec extends AnyFunSuite {
     assert(maxDiff == 0.0, s"codegen vs fold diverged by $maxDiff")
   }
 
-  test("dot_product is callable from SQL after registration") {
-    graft.plans.VectorExpressions.register(spark)
+  test("dot_product resolves in SQL on the engine session with no registration call") {
     val v = spark.sql(
       "SELECT dot_product(CAST(array(1.0,2.0,3.0) AS ARRAY<DOUBLE>), " +
         "CAST(array(4.0,5.0,6.0) AS ARRAY<DOUBLE>)) AS d").head().getDouble(0)
@@ -183,24 +177,14 @@ class SimilaritySpec extends AnyFunSuite {
   test("JaccardSizeBoundRule injects lossless size bounds ahead of the intersection") {
     import graft.functions.TextFunctions.jaccard
     import org.apache.spark.sql.functions.col
-    // extensions-enabled session: getOrCreate() would return the existing
-    // session (ignoring the extensions conf), so clear the default/active
-    // session first — the new one shares the SparkContext but gets its own
-    // extensions — and restore afterwards.
-    spark // force init
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val ext =
-      try SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .withExtensions(new graft.plans.GraftExtensions)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      finally {
-        SparkSession.setDefaultSession(spark)
-        SparkSession.setActiveSession(spark)
-      }
+    // baseline: the same session with the rule excluded. Every plan and
+    // action of the baseline runs inside this window, since optimization
+    // is lazy and reads the conf when it happens.
+    def withoutRule[T](f: => T): T = {
+      spark.conf.set("spark.sql.optimizer.excludedRules",
+        graft.plans.JaccardSizeBoundRule.ruleName)
+      try f finally spark.conf.unset("spark.sql.optimizer.excludedRules")
+    }
     import org.apache.spark.sql.catalyst.expressions.{And, Expression}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
     import org.apache.spark.sql.functions.split
@@ -209,44 +193,48 @@ class SimilaritySpec extends AnyFunSuite {
       case other => Seq(other)
     }
     // parquet-backed plan (a LocalRelation would be constant-folded away)
-    def query(s: SparkSession) = s.read.parquet(s"$sf/documents.parquet")
+    def query() = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), split(col("text"), " ").as("s1"),
         split(col("source"), "r").as("s2"))
       .filter(jaccard(col("s1"), col("s2")) >= 0.5)
-    val filtered = query(ext)
-    val nConj = filtered.queryExecution.optimizedPlan.collect {
+    def filterConjuncts(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
       case f: LFilter => conjuncts(f.condition).size
     }.sum
-    val baseline = query(spark)
-    val nConjBase = baseline.queryExecution.optimizedPlan.collect {
-      case f: LFilter => conjuncts(f.condition).size
-    }.sum
+    def docIds(df: DataFrame) =
+      df.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    val filtered = query()
+    val nConj = filterConjuncts(filtered)
+    val (nConjBase, baseIds) = withoutRule {
+      val baseline = query()
+      (filterConjuncts(baseline), docIds(baseline))
+    }
     assert(nConj == nConjBase + 2,
       s"expected 2 added size-bound conjuncts ($nConjBase -> $nConj):\n" +
         filtered.queryExecution.optimizedPlan)
     // lossless: identical rows with and without the rewrite
-    assert(filtered.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq ==
-      baseline.select("doc_id").collect().map(_.getLong(0)).sorted.toSeq)
+    assert(docIds(filtered) == baseIds)
 
     // join path: a both-sides jaccard predicate gets merged into the Join
     // condition by PushDownPredicates — the rule must fire there too
     import org.apache.spark.sql.catalyst.plans.logical.{Join => LJoin}
-    def joinQuery(s: SparkSession) = {
-      val docs = s.read.parquet(s"$sf/documents.parquet")
+    def joinQuery() = {
+      val docs = spark.read.parquet(s"$sf/documents.parquet")
       val a = docs.select(col("doc_id").as("id_a"), split(col("text"), " ").as("sa"))
       val b = docs.select(col("doc_id").as("id_b"), split(col("text"), " ").as("sb"))
       a.join(b, jaccard(col("sa"), col("sb")) >= 0.5 && col("id_a") < col("id_b"))
     }
-    val joined = joinQuery(ext)
-    val joinConj = joined.queryExecution.optimizedPlan.collect {
+    def joinConjuncts(df: DataFrame) = df.queryExecution.optimizedPlan.collect {
       case j: LJoin => j.condition.toSeq.flatMap(conjuncts).size
     }.sum
-    val joinConjBase = joinQuery(spark).queryExecution.optimizedPlan.collect {
-      case j: LJoin => j.condition.toSeq.flatMap(conjuncts).size
-    }.sum
+    val joined = joinQuery()
+    val joinConj = joinConjuncts(joined)
+    val (joinConjBase, baseCount) = withoutRule {
+      val baseline = joinQuery()
+      (joinConjuncts(baseline), baseline.count())
+    }
     assert(joinConj == joinConjBase + 2,
       s"expected 2 added bounds in join condition ($joinConjBase -> $joinConj)")
-    assert(joined.count() == joinQuery(spark).count())
+    assert(joined.count() == baseCount)
   }
 
   test("margin mining ranks a planted translation pair above hub neighbors") {

@@ -4,7 +4,6 @@ import java.net.InetSocketAddress
 import java.nio.file.Files
 
 import com.sun.net.httpserver.HttpServer
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.{Http, Ingest, Warehouse}
@@ -15,12 +14,30 @@ import graft.streaming.Streams
   * a local server, catalog DDL, the streaming upsert sink, and the typed
   * Aggregator UDAF. */
 class SurfaceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession(4)
+
+  test("every suite shares the engine session config, whichever ran first") {
+    // All suites share one test JVM and so one session. The spec's
+    // session exists first; running a property of each ScalaCheck suite
+    // builds theirs, which must not change the config the other suites
+    // (and Verify) run under.
+    import org.scalacheck.Test
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    Seq(EtlProps, DedupProps).foreach { ps =>
+      val (name, prop) = ps.properties.head
+      assert(Test.check(Test.Parameters.default.withMinSuccessfulTests(1),
+        prop).passed, name)
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "4",
+        s"after ${ps.name}")
+    }
+    assert(spark.conf.get(
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize") == "16384")
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(java.util.TimeZone.getDefault.getID == "UTC")
+    assert(spark.sessionState.optimizer.batches.flatMap(_.rules)
+      .contains(graft.plans.JaccardSizeBoundRule))
+  }
 
   test("HTTP sensor + extract against a live local endpoint (A1/A2)") {
     val server = HttpServer.create(new InetSocketAddress(0), 0)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,12 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * oracle restates but doesn't explain (oracle failures say "hash differs",
   * these say which invariant broke). */
 class TrainingSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark = GraftSession(4)
 
   private val sf = "/root/testdata/sf0.001"
 
