@@ -36,7 +36,7 @@ object Pipeline {
       throw new IllegalStateException("source unavailable (pre-flight failed)")
     val batch = Ingest.pivotPrices(spark, rawJson, batchTs)
     val inserted = Upsert.intoParquet(spark, batch, tablePath, Schemas.priceKeys)
-    val table = spark.read.parquet(tablePath)
+    val table = Upsert.readTable(spark, tablePath, batch.schema)
     val gate = QualityGate.enforce(table, now)
     RunResult(inserted, gate, table)
   }

@@ -13,10 +13,11 @@ import org.apache.spark.sql.functions._
   *   - freshness(extracted_at): WARN when > 2h stale, FAIL when > 6h stale
   * plus the PK-uniqueness invariant the Postgres DDL enforced implicitly.
   *
-  * Everything is one aggregation pass over the table (no per-check scans —
-  * Soda issues one SQL query per check; here Catalyst fuses all metrics
-  * into a single partial+final agg). `now` is an explicit parameter so runs
-  * are reproducible and oracle-checkable.
+  * Everything is one grouped aggregation over one scan of the table (no
+  * per-check scans — Soda issues one SQL query per check; here the min,
+  * freshness, row-count and duplicate-key metrics fuse into one plan).
+  * `now` is an explicit parameter so runs are reproducible and
+  * oracle-checkable.
   */
 object QualityGate {
 
@@ -28,17 +29,24 @@ object QualityGate {
   final case class Metrics(minPrice: Option[Double], maxExtractedAt: Option[Timestamp],
       rowCount: Long, duplicateKeys: Long)
 
+  /** All four metrics in one grouped aggregation over one scan: the
+    * per-key pass yields each key's min, max and row count, and the global
+    * pass folds them into the table's min, max, row count and number of
+    * keys held by more than one row. The row count is null on an empty
+    * table (a sum over no groups). */
   private def ag(df: DataFrame, valueCol: String, tsCol: String,
       keys: Seq[String]): Metrics = {
-    val dupes = df.groupBy(keys.map(col): _*).count().filter(col("count") > 1).count()
-    val row = df.agg(
-      min(col(valueCol)).as("min_v"),
-      max(col(tsCol)).as("max_ts"),
-      count(lit(1)).as("n")).head()
+    val row = df.groupBy(keys.map(col): _*)
+      .agg(min(col(valueCol)).as("min_v"), max(col(tsCol)).as("max_ts"),
+        count(lit(1)).as("c"))
+      .agg(min(col("min_v")), max(col("max_ts")), sum(col("c")),
+        count(when(col("c") > 1, 1)))
+      .head()
     Metrics(
-      if (row.isNullAt(0)) None else Some(row.getDouble(0)),
+      // through Number: a REAL (float) value column yields a Float
+      if (row.isNullAt(0)) None else Some(row.getAs[Number](0).doubleValue),
       if (row.isNullAt(1)) None else Some(row.getTimestamp(1)),
-      row.getLong(2), dupes)
+      if (row.isNullAt(2)) 0L else row.getLong(2), row.getLong(3))
   }
 
   /** Evaluate the gate. Severity ladder identical to the reference:
@@ -71,40 +79,6 @@ object QualityGate {
       case f: Fail => throw new IllegalStateException(s"quality gate failed: ${f.message}")
       case r => r
     }
-
-  /** Zero-extra-pass gate: metrics ride along the main action via
-    * `df.observe` (a CollectMetrics node in the same plan), so the gate
-    * costs nothing beyond the write/aggregation the pipeline already runs —
-    * the Soda re-scan of the reference
-    * (dags/crypto-etl-pipeline-psql.py:109-130) collapses into the load
-    * itself. Usage: attach, run your action on the returned frame, then
-    * [[observedResult]]. */
-  def attachObservation(df: DataFrame, valueCol: String = "price_usd",
-      tsCol: String = "extracted_at"): (DataFrame, org.apache.spark.sql.Observation) = {
-    val obs = org.apache.spark.sql.Observation()
-    val observed = df.observe(obs,
-      min(col(valueCol)).as("min_value"),
-      max(col(tsCol)).as("max_ts"),
-      count(lit(1)).as("n_rows"))
-    (observed, obs)
-  }
-
-  /** Evaluate the severity ladder from a completed observation (the
-    * duplicate-key check needs its own aggregation and is not part of the
-    * ride-along metrics). */
-  def observedResult(obs: org.apache.spark.sql.Observation, now: Timestamp,
-      warnAfterHours: Long = 2, failAfterHours: Long = 6): GateResult = {
-    val m = obs.get
-    val n = m("n_rows").asInstanceOf[Long]
-    if (n == 0L) return Fail("empty table")
-    val minV = Option(m("min_value")).map(_.asInstanceOf[Double])
-    if (minV.exists(_ < 0)) return Fail(s"min = ${minV.get} < 0")
-    val staleHours = Option(m("max_ts")).map(_.asInstanceOf[Timestamp])
-      .map(ts => (now.getTime - ts.getTime) / 3600000L).getOrElse(Long.MaxValue)
-    if (staleHours > failAfterHours) Fail(s"stale: ${staleHours}h > ${failAfterHours}h")
-    else if (staleHours > warnAfterHours) Warn(s"stale: ${staleHours}h > ${warnAfterHours}h")
-    else Pass
-  }
 
   /** The gate metrics as a one-row DataFrame — the oracle-checkable form,
     * and the shape a `df.observe()` listener would record in streaming. */

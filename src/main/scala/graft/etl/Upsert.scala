@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Idempotent insert-if-absent sink (reference operator A8).
   *
@@ -30,10 +31,13 @@ object Upsert {
     * /root/reference/dags/crypto-etl-pipeline-psql.py:157-164), and SQL
     * null semantics would otherwise make a null-keyed row invisible to the
     * anti-join — re-appended on every replay, silently breaking the
-    * idempotence contract. */
+    * idempotence contract.
+    *
+    * The existing keys are not deduplicated: a left-anti join returns the
+    * same rows whether or not its right side repeats a key. */
   def newRows(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
     incoming.na.drop("any", keys).dropDuplicates(keys)
-      .join(existing.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      .join(existing.select(keys.map(col): _*), keys, "left_anti")
 
   /** existing ∪ new — the post-upsert table contents. */
   def apply(existing: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
@@ -69,6 +73,15 @@ object Upsert {
       write = _.write.mode("append").partitionBy(partitionCol).parquet(tablePath))
   }
 
+  /** Reads a table this sink writes, with the schema of the batches it
+    * holds. Parquet schema inference is a Spark job of its own, and it
+    * throws on a table directory that holds no data file yet (a crashed
+    * first write leaves only _temporary/); an explicit schema skips the job
+    * and reads such a directory as zero rows. */
+  private[etl] def readTable(spark: SparkSession, tablePath: String,
+      schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(tablePath)
+
   private def antiJoinThenAppend(spark: SparkSession, incoming: DataFrame,
       tablePath: String, keys: Seq[String],
       pruneExisting: DataFrame => DataFrame,
@@ -76,7 +89,7 @@ object Upsert {
     // Treat ONLY path-not-found as "empty table" — a corrupt/unreadable
     // existing table must abort, not silently re-append the whole batch.
     val existing =
-      try pruneExisting(spark.read.parquet(tablePath))
+      try pruneExisting(readTable(spark, tablePath, incoming.schema))
       catch { case e: org.apache.spark.sql.AnalysisException
           if e.getCondition == "PATH_NOT_FOUND" =>
         spark.createDataFrame(
@@ -85,8 +98,13 @@ object Upsert {
     // localCheckpoint truncates the plan lineage BEFORE the append: a
     // cache()-only approach can recompute evicted partitions mid-write,
     // re-reading tablePath while it is being appended to (double insert).
-    val fresh = newRows(existing, incoming, keys).localCheckpoint(eager = true)
-    val n = fresh.count()
+    // The row count rides along the checkpoint's job as an observed metric
+    // instead of a second count() action.
+    val counted = Observation()
+    val fresh = newRows(existing, incoming, keys)
+      .observe(counted, count(lit(1)).as("n"))
+      .localCheckpoint(eager = true)
+    val n = counted.get("n").asInstanceOf[Long]
     if (n > 0) write(fresh)
     n
   }

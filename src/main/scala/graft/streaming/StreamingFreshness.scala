@@ -19,8 +19,8 @@ import graft.etl.QualityGate.{Fail, GateResult, Pass, Warn}
   * [[StreamingQueryProgress]].eventTime ("max"/"min"/"avg"/"watermark",
   * populated whenever the query has an event-time watermark). Freshness
   * therefore costs ZERO extra passes at any scale: we read the progress
-  * telemetry the engine already emits, exactly like the batch gate's
-  * `observe()` form rides along the main action.
+  * telemetry the engine already emits, where the batch gate
+  * ([[graft.etl.QualityGate]]) must scan the table once.
   *
   * Two consumption shapes:
   *  - [[latest]] / [[gate]]: pull-style, from a query handle — the form a

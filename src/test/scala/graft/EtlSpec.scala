@@ -1,5 +1,6 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import org.scalatest.funsuite.AnyFunSuite
@@ -85,9 +86,9 @@ class EtlSpec extends AnyFunSuite {
 
   test("gate severity ladder: pass / warn (>2h) / fail (>6h) / negative / dup") {
     import spark.implicits._
-    def table(price: Double, ageHours: Int) = {
+    def table(price: Double, ageHours: Int, id: String = "bitcoin") = {
       val t = new Timestamp(ts.getTime - ageHours * 3600000L)
-      Seq(("bitcoin", price, t)).toDF("crypto_id", "price_usd", "extracted_at")
+      Seq((id, price, t)).toDF("crypto_id", "price_usd", "extracted_at")
     }
     assert(QualityGate.evaluate(table(1.0, 1), ts) == QualityGate.Pass)
     // exactly 2h is not stale (warn is strictly greater-than, checks.yml:8)
@@ -96,8 +97,17 @@ class EtlSpec extends AnyFunSuite {
     assert(QualityGate.evaluate(table(1.0, 6), ts).isInstanceOf[QualityGate.Warn])
     assert(QualityGate.evaluate(table(1.0, 7), ts).isInstanceOf[QualityGate.Fail])
     assert(QualityGate.evaluate(table(-0.0001, 1), ts).isInstanceOf[QualityGate.Fail])
+    // the reference's REAL (float4) price column
+    assert(QualityGate.evaluate(Ingest.float4Compat(table(1.0, 1)), ts) == QualityGate.Pass)
+    assert(QualityGate.evaluate(Ingest.float4Compat(table(-1.0, 1)), ts)
+      .isInstanceOf[QualityGate.Fail])
     val dup = table(1.0, 1).union(table(2.0, 1))
     assert(QualityGate.evaluate(dup, ts).isInstanceOf[QualityGate.Fail])
+    val twoDups = dup.union(table(1.0, 1, "tether")).union(table(3.0, 1, "tether"))
+      .union(table(1.0, 1, "solana"))
+    val got = QualityGate.evaluate(twoDups, ts)
+    assert(got.isInstanceOf[QualityGate.Fail] && got.message.startsWith("2 duplicate"), got)
+    assert(QualityGate.evaluate(table(1.0, 1).limit(0), ts) == QualityGate.Fail("empty table"))
     intercept[IllegalStateException] { QualityGate.enforce(table(1.0, 7), ts) }
   }
 
@@ -111,32 +121,56 @@ class EtlSpec extends AnyFunSuite {
     assert(r2.rowsInserted == 0 && r2.table.count() == 2)
   }
 
+  test("pipeline run into a table directory holding no data file inserts and gates") {
+    // a crashed first write leaves only _temporary/ behind
+    val dir = Files.createTempDirectory("graft_pipe_tmp").toString + "/t"
+    Files.createDirectories(Paths.get(dir, "_temporary", "0"))
+    val json = """{"bitcoin":{"usd":67210.0},"tether":{"usd":0.99}}"""
+    val now = new Timestamp(ts.getTime + 3600000L)
+    val r = Pipeline.run(spark, json, ts, dir, now)
+    assert(r.rowsInserted == 2 && r.gate == QualityGate.Pass && r.table.count() == 2)
+  }
+
+  test("upsert into a table holding a corrupt data file aborts and writes nothing") {
+    val dir = Files.createTempDirectory("graft_pipe_bad").toString
+    val garbage = Paths.get(dir, "part-0.parquet")
+    Files.write(garbage, "not a parquet file".getBytes("UTF-8"))
+    val batch = Ingest.pivotPrices(spark, """{"bitcoin":{"usd":1.0}}""", ts)
+    intercept[org.apache.spark.SparkException] {
+      Upsert.intoParquet(spark, batch, dir, Schemas.priceKeys)
+    }
+    val left = Files.list(Paths.get(dir)).count()
+    assert(left == 1L, s"$left entries in the table directory, expected only the corrupt file")
+  }
+
+  test("a warm pipeline tick runs at most 8 Spark jobs; a replay at most 7, writing no file") {
+    val dir = Files.createTempDirectory("graft_pipe_jobs").toString + "/t"
+    val json = """{"bitcoin":{"usd":67210.0},"tether":{"usd":0.99},"solana":{"usd":98.5}}"""
+    def hour(h: Int) = new Timestamp(ts.getTime + h * 3600000L)
+    def parquetFiles() = Files.list(Paths.get(dir)).toArray
+      .count(_.toString.endsWith(".parquet"))
+    Pipeline.run(spark, json, hour(0), dir, hour(1)) // creates the table
+    Pipeline.run(spark, json, hour(1), dir, hour(2)) // warms the tick's code paths
+    val (fresh, freshJobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      Pipeline.run(spark, json, hour(2), dir, hour(3))
+    }
+    assert(fresh.rowsInserted == 3 && fresh.gate == QualityGate.Pass)
+    assert(freshJobs <= 8, s"fresh tick ran $freshJobs jobs")
+    val files = parquetFiles()
+    val (replay, replayJobs) = org.apache.spark.JobCount(spark.sparkContext) {
+      Pipeline.run(spark, json, hour(2), dir, hour(3))
+    }
+    assert(replay.rowsInserted == 0 && replay.gate == QualityGate.Pass)
+    assert(replayJobs <= 7, s"replay ran $replayJobs jobs")
+    assert(parquetFiles() == files, "a replay must add no parquet file")
+  }
+
   test("pre-flight retries then gives up (A1 sensor semantics)") {
     var calls = 0
     val ok = Ingest.preflight(() => { calls += 1; calls >= 3 },
       attempts = 6, delayMillis = 0L)
     assert(ok && calls == 3)
     assert(!Ingest.preflight(() => false, attempts = 2, delayMillis = 0L))
-  }
-
-  test("observe()-based gate matches the aggregation gate, zero extra pass") {
-    import spark.implicits._
-    def table(price: Double, ageHours: Int) = {
-      val t = new Timestamp(ts.getTime - ageHours * 3600000L)
-      Seq(("bitcoin", price, t)).toDF("crypto_id", "price_usd", "extracted_at")
-    }
-    for ((df, expectWarnOrFail) <- Seq(
-        (table(1.0, 1), "pass"), (table(1.0, 3), "warn"),
-        (table(1.0, 7), "fail"), (table(-1.0, 1), "fail"))) {
-      val (observed, obs) = QualityGate.attachObservation(df)
-      observed.write.format("noop").mode("overwrite").save() // the main action
-      val got = QualityGate.observedResult(obs, ts) match {
-        case QualityGate.Pass => "pass"
-        case _: QualityGate.Warn => "warn"
-        case _: QualityGate.Fail => "fail"
-      }
-      assert(got == expectWarnOrFail)
-    }
   }
 
   test("declarative check config: parses the reference dialect and drives the gate") {
