@@ -17,10 +17,11 @@ pairs the change won (by the metric's "better" direction) out of all pairs
 run, and a verdict: "gain" when the change won at least 9 in 10 pairs and
 its median beats the base's by more than the base's interquartile range;
 "worse than bound" when its median is worse by more than the metric's
-bound; "unresolved" when any run failed or the base's own spread exceeds
-the bound; else "within bound". A pair with a failed run counts as not won.
-Then each side's failed/attempted ops and incorrect runs. Exits 1 when a
-run fails or reports incorrect output.
+bound; "unresolved" when any run failed or reported incorrect output, or
+the base's own spread exceeds the bound; else "within bound". A run with
+incorrect output counts as a failed run: its pair is not won, and its
+figures enter no median. Then each side's failed/attempted ops and
+incorrect runs. Exits 1 when a run fails or reports incorrect output.
 """
 import argparse
 import json
@@ -109,7 +110,8 @@ def main():
         name, lower = m["name"], m["better"] == "lower"
         pairs = [(b["metrics"][name]["value"], c["metrics"][name]["value"])
                  for b, c in zip(runs["base"], runs["change"])
-                 if b and c and name in b["metrics"] and name in c["metrics"]]
+                 if b and c and b["correct"] and c["correct"]
+                 and name in b["metrics"] and name in c["metrics"]]
         if not pairs:
             continue
         base, change = [b for b, _ in pairs], [c for _, c in pairs]
@@ -118,7 +120,7 @@ def main():
         gain = (bq[1] - cq[1]) if lower else (cq[1] - bq[1])
         all_better = (max(change) < min(base)) if lower else (min(change) > max(base))
         if len(pairs) < args.pairs:
-            verdict = "unresolved (failed runs)"
+            verdict = "unresolved (failed or incorrect runs)"
         elif wins >= 0.9 * args.pairs and gain > bq[2] - bq[0]:
             verdict = "gain"
         elif -gain / bq[1] > m["bound"]:

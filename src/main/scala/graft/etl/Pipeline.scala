@@ -24,7 +24,8 @@ object Pipeline {
       table: DataFrame)
 
   /** One pipeline run: parse+pivot a raw payload, stamp the batch
-    * timestamp, upsert into the warehouse table, evaluate the gate.
+    * timestamp, upsert into the warehouse table, evaluate the gate on the
+    * metrics the upsert's pass yields (no second scan of the table).
     *
     * @param probe availability pre-flight (A1); aborts before any data work
     *              when the source is down, like the reference's HttpSensor.
@@ -35,9 +36,9 @@ object Pipeline {
     if (!Ingest.preflight(probe, attempts = 1, delayMillis = 0L))
       throw new IllegalStateException("source unavailable (pre-flight failed)")
     val batch = Ingest.pivotPrices(spark, rawJson, batchTs)
-    val inserted = Upsert.intoParquet(spark, batch, tablePath, Schemas.priceKeys)
-    val table = Upsert.readTable(spark, tablePath, batch.schema)
-    val gate = QualityGate.enforce(table, now)
-    RunResult(inserted, gate, table)
+    val (inserted, metrics) = Upsert.intoParquetGated(spark, batch, tablePath,
+      Schemas.priceKeys, "price_usd", "extracted_at")
+    val gate = QualityGate.enforce(metrics, now)
+    RunResult(inserted, gate, Upsert.readTable(spark, tablePath, batch.schema))
   }
 }

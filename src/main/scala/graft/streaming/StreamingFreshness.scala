@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, StreamingQueryProgress}
 
-import graft.etl.QualityGate.{Fail, GateResult, Pass, Warn}
+import graft.etl.QualityGate
+import graft.etl.QualityGate.{Fail, GateResult}
 
 /** Streaming freshness observability — the streaming twin of the A10 batch
   * freshness gate (reference: /root/reference/include/soda/checks.yml:7-9,
@@ -72,17 +73,11 @@ object StreamingFreshness {
   /** Severity ladder identical to the batch gate: how stale is the stream's
     * event-time high-water mark relative to `now`? */
   def gate(fp: Option[FreshnessProgress], now: Timestamp,
-      warnAfterHours: Long = 2, failAfterHours: Long = 6): GateResult = {
-    val staleHours = fp.flatMap(_.maxEventTime)
-      .map(ts => (now.getTime - ts.getTime) / 3600000L)
-      .getOrElse(Long.MaxValue)
-    if (staleHours > failAfterHours)
-      Fail(if (staleHours == Long.MaxValue) "no event-time progress observed"
-           else s"stream stale: ${staleHours}h > ${failAfterHours}h")
-    else if (staleHours > warnAfterHours)
-      Warn(s"stream stale: ${staleHours}h > ${warnAfterHours}h")
-    else Pass
-  }
+      warnAfterHours: Long = 2, failAfterHours: Long = 6): GateResult =
+    fp.flatMap(_.maxEventTime) match {
+      case None => Fail("no event-time progress observed")
+      case newest => QualityGate.freshness(newest, now, warnAfterHours, failAfterHours)
+    }
 
   /** Always-on per-session listener: retains the newest informative
     * [[FreshnessProgress]] per query id. Register once via

@@ -862,7 +862,7 @@ object Streams {
   }
 
   /** Streaming insert-if-absent sink: each micro-batch goes through the
-    * same anti-join upsert as the batch pipeline (A8), making the sink
+    * same upsert pass as the batch pipeline (A8), making the sink
     * idempotent — exactly-once results even when a batch replays after a
     * checkpoint recovery. This is the foreachBatch pattern the Tier-B
     * "Sinks" row calls for. Blocks until the AvailableNow backlog drains. */

@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 
 import org.scalacheck.{Gen, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 import graft.etl.{Schemas, Upsert}
 import graft.operators.Dedup
 
@@ -122,5 +122,95 @@ object EtlProps extends Properties("graft.etl") {
       // duplicates never straddle buckets: each distinct value appears in
       // exactly one bucket's [min_v, max_v] span (ranges are disjoint)
       partitions && ordered && bounded
+    }
+}
+
+/** Random pipeline tick sequences against the whole-table gate and the
+  * pure anti-join upsert. Apart from [[EtlProps]] only for its case count:
+  * a case is a sequence of up to five ticks, about a dozen Spark jobs
+  * each. */
+object EtlTickProps extends Properties("graft.etl.tick") {
+
+  override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
+    p.withMinSuccessfulTests(12)
+
+  private lazy val spark = GraftSession(4)
+
+  private val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+  private val hourMs = 3600000L
+
+  /** One tick: its payload's quotes (a repeated coin is an in-batch
+    * duplicate key), its batch hour, and the monitor's clock in minutes
+    * after that hour. */
+  private final case class Tick(quotes: List[(String, Option[Double])], hour: Int,
+      nowMinutes: Int) {
+    def json: String = quotes.map { case (c, p) =>
+      s""""$c":{"usd":${p.fold("null")(_.toString)}}""" }.mkString("{", ",", "}")
+    def batchTs = new Timestamp(t0 + hour * hourMs)
+    def now = new Timestamp(batchTs.getTime + nowMinutes * 60000L)
+  }
+
+  private val priceGen: Gen[Option[Double]] = Gen.frequency(
+    20 -> Gen.choose(0, 100000).map(c => Some(c / 100.0)),
+    2 -> Gen.const(None),
+    1 -> Gen.choose(1, 500).map(c => Some(-c / 100.0)))
+
+  private val quotesGen = Gen.choose(1, 6).flatMap(Gen.listOfN(_,
+    Gen.zip(Gen.oneOf("bitcoin", "ethereum", "tether", "solana", "doge"), priceGen)))
+
+  /** Fresh hours, replays of an earlier tick, and new payloads for an
+    * earlier hour; clocks up to 9 h late cover Pass, Warn and Fail. */
+  private def ticksGen(left: Int, done: List[Tick], nextHour: Int): Gen[List[Tick]] =
+    if (left == 0) Gen.const(done.reverse) else for {
+      kind <- if (done.isEmpty) Gen.const("fresh")
+        else Gen.frequency(3 -> "fresh", 1 -> "replay", 1 -> "earlier")
+      nowMinutes <- Gen.choose(0, 9 * 60)
+      t <- kind match {
+        case "fresh" => quotesGen.map(Tick(_, nextHour, nowMinutes))
+        case "replay" => Gen.oneOf(done).map(_.copy(nowMinutes = nowMinutes))
+        case _ => Gen.zip(quotesGen, Gen.choose(0, nextHour - 1))
+          .map { case (q, h) => Tick(q, h, nowMinutes) }
+      }
+      ticks <- ticksGen(left - 1, t :: done, math.max(nextHour, t.hour + 1))
+    } yield ticks
+
+  property("a tick's gate equals the whole-table gate; its table equals the anti-join upsert's") =
+    forAll(Gen.choose(1, 5).flatMap(ticksGen(_, Nil, 0))) { ticks =>
+      import scala.jdk.CollectionConverters._
+      import scala.util.{Failure, Success, Try}
+      import org.apache.spark.sql.Row
+      import graft.etl.{Ingest, Pipeline, QualityGate}
+      val dir = java.nio.file.Files.createTempDirectory("graft_ticks").toString + "/t"
+      def key(r: Row) = (r.getString(0), r.getTimestamp(2))
+      def price(r: Row) = Option(r.get(1)).map(_.asInstanceOf[Double])
+      var previous = Seq.empty[Row]
+      def check(t: Tick): Option[String] = {
+        val batch = Ingest.pivotPrices(spark, t.json, t.batchTs)
+        val want = Upsert(spark.createDataFrame(previous.asJava, batch.schema), batch,
+          Schemas.priceKeys).collect().map(key).toSet
+        val got = Try(Pipeline.run(spark, t.json, t.batchTs, dir, t.now))
+        val table = spark.read.schema(batch.schema).parquet(dir)
+        val gate = QualityGate.evaluate(table, t.now)
+        val after = table.collect().toSeq
+        val old = previous.map(r => key(r) -> price(r)).toMap
+        val offered = t.quotes.groupMap(_._1)(_._2)
+        previous = after
+        val gateOk = (got, gate) match {
+          case (Failure(e: IllegalStateException), f: QualityGate.Fail) =>
+            e.getMessage == s"quality gate failed: ${f.message}"
+          case (Success(r), g) => r.gate == g
+          case _ => false
+        }
+        val keys = after.map(key)
+        if (!gateOk) Some(s"$t: tick gave $got, the table's gate is $gate")
+        else if (keys.distinct.size != keys.size || keys.toSet != want)
+          Some(s"$t: table keys $keys, anti-join upsert keys $want")
+        else after.find(r => old.get(key(r)) match {
+          case Some(v) => v != price(r)
+          case None => !offered(r.getString(0)).contains(price(r))
+        }).map(r => s"$t: row $r is neither the old row nor one of the batch's")
+      }
+      val failed = ticks.iterator.map(check).collectFirst { case Some(m) => m }
+      failed.isEmpty :| failed.getOrElse("")
     }
 }

@@ -143,7 +143,7 @@ class EtlSpec extends AnyFunSuite {
     assert(left == 1L, s"$left entries in the table directory, expected only the corrupt file")
   }
 
-  test("a warm pipeline tick runs at most 8 Spark jobs; a replay at most 7, writing no file") {
+  test("a warm pipeline tick runs at most 4 Spark jobs; a replay at most 3, writing no file") {
     val dir = Files.createTempDirectory("graft_pipe_jobs").toString + "/t"
     val json = """{"bitcoin":{"usd":67210.0},"tether":{"usd":0.99},"solana":{"usd":98.5}}"""
     def hour(h: Int) = new Timestamp(ts.getTime + h * 3600000L)
@@ -155,14 +155,55 @@ class EtlSpec extends AnyFunSuite {
       Pipeline.run(spark, json, hour(2), dir, hour(3))
     }
     assert(fresh.rowsInserted == 3 && fresh.gate == QualityGate.Pass)
-    assert(freshJobs <= 8, s"fresh tick ran $freshJobs jobs")
+    assert(freshJobs <= 4, s"fresh tick ran $freshJobs jobs")
     val files = parquetFiles()
     val (replay, replayJobs) = org.apache.spark.JobCount(spark.sparkContext) {
       Pipeline.run(spark, json, hour(2), dir, hour(3))
     }
     assert(replay.rowsInserted == 0 && replay.gate == QualityGate.Pass)
-    assert(replayJobs <= 7, s"replay ran $replayJobs jobs")
+    assert(replayJobs <= 3, s"replay ran $replayJobs jobs")
     assert(parquetFiles() == files, "a replay must add no parquet file")
+  }
+
+  test("each tick appends one parquet file while the table outgrows one partition") {
+    val dir = Files.createTempDirectory("graft_pipe_files").toString + "/t"
+    val json = (0 until 250).map(i => f""""coin-$i%03d":{"usd":${i + 1.5}}""")
+      .mkString("{", ",", "}")
+    def hour(h: Int) = new Timestamp(ts.getTime + h * 3600000L)
+    // from the 7th tick on, the pass over table and batch spans 2+ partitions
+    val files = (0 until 10).map { h =>
+      Pipeline.run(spark, json, hour(h), dir, hour(h + 1))
+      Files.list(Paths.get(dir)).toArray.count(_.toString.endsWith(".parquet"))
+    }
+    assert(files == (1 to 10), s"parquet files after each tick: $files")
+  }
+
+  test("the tick's gate catches a duplicate key a foreign writer planted") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_pipe_foreign").toString + "/t"
+    val json = """{"bitcoin":{"usd":67210.0},"tether":{"usd":0.99}}"""
+    def hour(h: Int) = new Timestamp(ts.getTime + h * 3600000L)
+    assert(Pipeline.run(spark, json, hour(0), dir, hour(1)).gate == QualityGate.Pass)
+    Seq(("bitcoin", 1.0, hour(0))).toDF("crypto_id", "price_usd", "extracted_at")
+      .write.mode("append").parquet(dir)
+    val err = intercept[IllegalStateException] {
+      Pipeline.run(spark, json, hour(1), dir, hour(2))
+    }
+    val want = QualityGate.evaluate(spark.read.parquet(dir), hour(2))
+    assert(want.isInstanceOf[QualityGate.Fail] && want.message.startsWith("1 duplicate"), want)
+    assert(err.getMessage == s"quality gate failed: ${want.message}", err.getMessage)
+  }
+
+  test("a negative price fails the tick's gate after the append") {
+    val dir = Files.createTempDirectory("graft_pipe_neg").toString + "/t"
+    def hour(h: Int) = new Timestamp(ts.getTime + h * 3600000L)
+    Pipeline.run(spark, """{"bitcoin":{"usd":67210.0}}""", hour(0), dir, hour(1))
+    val err = intercept[IllegalStateException] {
+      Pipeline.run(spark, """{"bitcoin":{"usd":-1.5},"tether":{"usd":0.99}}""",
+        hour(1), dir, hour(2))
+    }
+    assert(err.getMessage == "quality gate failed: min(price_usd) = -1.5 < 0.0", err.getMessage)
+    assert(spark.read.parquet(dir).count() == 3, "the gate runs after the append")
   }
 
   test("pre-flight retries then gives up (A1 sensor semantics)") {

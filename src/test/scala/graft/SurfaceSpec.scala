@@ -89,7 +89,7 @@ class SurfaceSpec extends AnyFunSuite {
     run("ckpt1")
     val n1 = spark.read.parquet(table).count()
     // fresh checkpoint forces the whole backlog to replay — the sink's
-    // anti-join must make the second pass a no-op
+    // absence check must make the second pass a no-op
     run("ckpt2")
     val n2 = spark.read.parquet(table).count()
     val expected = Tables.events(spark, "/root/testdata/sf0.001").count()
