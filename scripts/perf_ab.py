@@ -22,6 +22,12 @@ the base's own spread exceeds the bound; else "within bound". A run with
 incorrect output counts as a failed run: its pair is not won, and its
 figures enter no median. Then each side's failed/attempted ops and
 incorrect runs. Exits 1 when a run fails or reports incorrect output.
+
+Each run's line also carries the VM's CPU steal during the run (the
+`cpu_share.steal` of its context line), and a pair where either side ran
+at more than 5% steal is marked, in its own line and in the summary: its
+figures may measure the host rather than the change. Marked pairs still
+count toward the verdict.
 """
 import argparse
 import json
@@ -33,6 +39,7 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+STEAL_MARK = 0.05
 
 
 def export(rev, dest):
@@ -55,6 +62,11 @@ def run_one(tree, workload, seed, seconds, trace):
         sys.stderr.write(res.stderr[-2000:])
         return None
     return dict(json.loads(lines[-1]), context=json.loads(lines[-2])["context"])
+
+
+def steal(run):
+    """The CPU steal share during a run, or None when it was not measured."""
+    return ((run or {}).get("context", {}).get("cpu_share") or {}).get("steal")
 
 
 def quartiles(xs):
@@ -81,6 +93,7 @@ def main():
         trees = {"base": os.path.join(tmp, "base"), "change": ROOT}
         export(args.base, trees["base"])
         runs = {"base": [], "change": []}
+        marked = []
         ok = True
         for i in range(args.pairs):
             seed = args.seed0 + i
@@ -95,9 +108,14 @@ def main():
                 ok = ok and r["correct"]
                 vals = " ".join(f"{m['name']}={r['metrics'][m['name']]['value']:.3f}"
                                 for m in end_to_end if m["name"] in r["metrics"])
+                st = steal(r)
                 print(f"pair {i + 1} seed {seed} {side:6}: {vals} "
-                      f"failed={r['failed']}/{r['attempted']} correct={r['correct']}",
-                      flush=True)
+                      f"failed={r['failed']}/{r['attempted']} correct={r['correct']} "
+                      f"steal={'n/a' if st is None else f'{st:.1%}'}", flush=True)
+            if any((steal(runs[side][-1]) or 0) > STEAL_MARK for side in order):
+                marked.append(i + 1)
+                print(f"pair {i + 1} seed {seed}: steal above {STEAL_MARK:.0%} "
+                      "on at least one side", flush=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
@@ -132,6 +150,8 @@ def main():
         print(f"{name:10} {bq[1]:9.3f} [{bq[0]:.3f}-{bq[2]:.3f}] "
               f"{cq[1]:9.3f} [{cq[0]:.3f}-{cq[2]:.3f}] "
               f"{(cq[1] - bq[1]) / bq[1]:+7.1%} {wins:>2}/{args.pairs}  {verdict}")
+    print(f"pairs with steal above {STEAL_MARK:.0%}: "
+          f"{', '.join(map(str, marked)) if marked else 'none'}")
     for side in ("base", "change"):
         done = [r for r in runs[side] if r]
         print(f"{side}: failed ops {sum(r['failed'] for r in done)}/"

@@ -1,7 +1,10 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The co-purchase graph, materialized ONCE per dataset CONTENT
   * ([[graft.Stage]]: persistent across sessions, fingerprint-keyed so a
@@ -68,14 +71,26 @@ object CoPurchase {
       .agg((count(lit(1)) * sign).as("supp"))
   }
 
+  private val schemas = new ConcurrentHashMap[String, StructType]()
+
+  /** A staged table read with an explicit schema. A committed stage
+    * directory never changes (it is keyed by the source fingerprint), so
+    * its schema is memoized per path and only the first read pays
+    * parquet's schema-inference job. */
+  private def staged(s: SparkSession, d: String, table: String): DataFrame = {
+    val path = s"${stagedDir(s, d)}/$table"
+    s.read.schema(schemas.computeIfAbsent(path, s.read.parquet(_).schema))
+      .parquet(path)
+  }
+
   /** Distinct (o, p) order–part incidence pairs. */
   def orderParts(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"${stagedDir(s, d)}/order_parts.parquet")
+    staged(s, d, "order_parts.parquet")
 
   /** Unordered part pairs (pa < pb) with supp = co-occurrence order
     * count; `minSupp` filters the staged table (pushed to the scan). */
   def pairs(s: SparkSession, d: String, minSupp: Long = 1L): DataFrame = {
-    val all = s.read.parquet(s"${stagedDir(s, d)}/pairs.parquet")
+    val all = staged(s, d, "pairs.parquet")
     if (minSupp <= 1L) all else all.filter(col("supp") >= minSupp)
   }
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.CacheLifecycle.TrackedPersistOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.TextFunctions._
@@ -589,15 +589,34 @@ object Dedup {
     * eagerly localCheckpointed: rounds reference their inputs several
     * times, so lazy chaining would recompute exponentially (the classic
     * iterative-DataFrame trap) — and the first checkpoint also runs the
-    * upstream candidate-pair pipeline exactly once.
+    * upstream candidate-pair pipeline exactly once. Each edge checkpoint
+    * observes its own row count, which sizes the width and ends the loop
+    * without a separate count or emptiness job.
+    *
+    * A graph within one task's edge budget contracts in ONE partition,
+    * whose union-find has seen every edge: its roots are already the
+    * component minima, so those stars are the answer, with no label
+    * aggregation and no residual round.
     */
-  def clusterPairs(pairs: DataFrame, maxIterations: Int = 40): DataFrame = {
+  def clusterPairs(pairs: DataFrame, maxIterations: Int = 40): DataFrame =
+    clusterPairs(pairs, maxIterations, edgesPerTask = 1000000L)
+
+  /** [[clusterPairs]] with the per-task edge budget that sizes the
+    * contraction width as a parameter (specs shrink it to run the residual
+    * rounds on small graphs). */
+  private[graft] def clusterPairs(pairs: DataFrame, maxIterations: Int,
+      edgesPerTask: Long): DataFrame = {
     import pairs.sparkSession.implicits._
     def contract(edges: DataFrame): DataFrame = edges
       .as[(Long, Long)]
       .mapPartitions(localMinReps)
       .toDF("node", "rep0")
-      .localCheckpoint(true)
+    // an edge table checkpointed together with its observed row count
+    def counted(edges: DataFrame): (DataFrame, Long) = {
+      val rows = Observation()
+      val cp = edges.observe(rows, count(lit(1)).as("n")).localCheckpoint(true)
+      (cp, rows.get("n").asInstanceOf[Long])
+    }
 
     // Size the contraction width from the measured edge count (~1M edge
     // tuples ≈ 16 MB of longs per union-find task — inside the per-task
@@ -610,15 +629,19 @@ object Dedup {
     // parallelism via the checkpoint — and at large edge counts the width
     // is unchanged. Components are partitioning-invariant (the min-label
     // invariant), so the result is identical at any width.
-    val raw = pairs
-      .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .localCheckpoint(true)
+    val (raw, nRaw) = counted(pairs
+      .select(col("doc_a").cast("long"), col("doc_b").cast("long")))
     val parentWidth = raw.rdd.getNumPartitions
     val width = math.max(1L, math.min(parentWidth.toLong,
-      raw.count() / 1000000L + 1)).toInt
+      nRaw / edgesPerTask + 1)).toInt
+    def result(labels: DataFrame): DataFrame =
+      labels.select(col("doc_id"), col("rep").as("cluster_rep"),
+        (col("doc_id") === col("rep")).as("is_canonical"))
     // Round 0 over the raw pairs: stars = (endpoint, partition-local rep).
-    val stars0 = contract(
-      if (width < parentWidth) raw.coalesce(width) else raw)
+    val local = contract(if (width < parentWidth) raw.coalesce(width) else raw)
+    if (width == 1)
+      return result(local.select(col("node").as("doc_id"), col("rep0").as("rep")))
+    val stars0 = local.localCheckpoint(true)
     // labels: original node -> current best-known rep.
     var labels = stars0.groupBy("node").agg(min(col("rep0")).as("rep"))
       .withColumnRenamed("node", "doc_id")
@@ -626,14 +649,13 @@ object Dedup {
     // Residual edges: a node seen by several partitions links its local
     // reps; relabeling (node, rep0) through the node's global min rep and
     // dropping self-loops leaves exactly the cross-partition connectivity.
-    var edges = stars0
+    var (edges, nEdges) = counted(stars0
       .join(labels.withColumnRenamed("doc_id", "node"), "node")
       .select(col("rep0").as("a"), col("rep").as("b"))
-      .filter(col("a") =!= col("b"))
-      .localCheckpoint(true)
+      .filter(col("a") =!= col("b")))
     var iter = 0
-    while (!edges.isEmpty && iter < maxIterations) {
-      val stars = contract(edges)
+    while (nEdges > 0 && iter < maxIterations) {
+      val stars = contract(edges).localCheckpoint(true)
       val repMap = stars.groupBy("node").agg(min(col("rep0")).as("newRep"))
         .localCheckpoint(true)
       // Pull every label one merge step down (reps not merged this round
@@ -646,23 +668,23 @@ object Dedup {
         .localCheckpoint(true)
       // Relabel both endpoints of the residual star edges through the
       // merged reps; self-loops vanish, so the rep graph strictly shrinks.
-      edges = stars
+      val (next, n) = counted(stars
         .join(repMap, "node")
         .join(repMap.withColumnRenamed("node", "rep0")
           .withColumnRenamed("newRep", "rep0New"), "rep0")
         .select(col("rep0New").as("a"), col("newRep").as("b"))
-        .filter(col("a") =!= col("b"))
-        .localCheckpoint(true)
+        .filter(col("a") =!= col("b")))
+      edges = next
+      nEdges = n
       iter += 1
     }
     // The operator's contract is EXACT components — a capped-out loop would
     // silently emit wrong clusters (and a hash mismatch downstream nobody
     // can attribute). Fail loudly instead. (Contraction merges every
     // nonempty residual round, so the cap is a backstop, not a tuning.)
-    if (!edges.isEmpty) throw new IllegalStateException(
+    if (nEdges > 0) throw new IllegalStateException(
       s"clusterPairs did not converge in $maxIterations iterations")
-    labels.select(col("doc_id"), col("rep").as("cluster_rep"),
-      (col("doc_id") === col("rep")).as("is_canonical"))
+    result(labels)
   }
 
   /** Union-find with path compression over one partition's edges; emits

@@ -1,7 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Iterative graph analytics over edge DataFrames — the sparse-matrix
   * power-iteration family (PageRank here; the same execution shape serves
@@ -151,80 +156,98 @@ object Graph {
   }
 
   /** Iterative k-core peeling (Seidman 1983's "Network structure and
-    * minimum degree" decomposition step, restated declaratively): delete
-    * every node of degree < k, recompute degrees, repeat to fixpoint. The
-    * surviving subgraph is the k-core — the standard density filter for
-    * graph sampling and community pre-processing.
+    * minimum degree" decomposition step): delete every node of degree
+    * < k, recompute degrees, repeat to fixpoint. The surviving subgraph
+    * is the k-core — the standard density filter for graph sampling and
+    * community pre-processing.
     *
-    * Per round: one src-keyed degree aggregation + two semi-joins
-    * restricting edges to surviving endpoints — three shuffles, all
-    * edge-bounded, each round's edge set eagerly localCheckpointed (the
-    * frontier-lineage rule). The edge count is monotonically
-    * non-increasing; convergence = a round that drops nothing, detected
-    * from the checkpointed counts (no extra jobs). Peeling is IDEMPOTENT
-    * past the fixpoint, which is what lets a fixed-round oracle
-    * restatement equal the converged answer as long as convergence
-    * happens within the unrolled budget — callers who rely on that must
-    * check `converged` (q169 throws loudly if not, the clusterPairs
-    * precedent).
+    * One Spark job per round, and no query plan per round: the symmetric
+    * edge table is hash-partitioned by src ONCE (the exchange runs inside
+    * round 1's job), so a node's degree is partition-local. Each round's
+    * job materializes that round's edge table (a lazy local checkpoint)
+    * and returns every partition's drop set (degree < k). The next table
+    * filters both endpoints against the drop set as a broadcast variable —
+    * no edge shuffle, no broadcast job, partitioning kept — and the
+    * previous table is released once the next one has materialized. A
+    * drop set past `broadcastDropMax` is never collected (a partition
+    * stops at `broadcastDropMax + 1` nodes): that round instead sends each
+    * edge whose src survives, reversed, to its dst's partition — one
+    * edge-sized shuffle — where it survives iff the dst does too. Both
+    * paths keep exactly the edges with two surviving endpoints.
     *
-    * @param pairs distinct undirected edges (a, b), any canonical order
+    * Convergence = a round that drops nothing; that confirming round
+    * counts in `roundsRun`. Peeling is IDEMPOTENT past the fixpoint,
+    * which is what lets a fixed-round oracle restatement equal the
+    * converged answer as long as convergence happens within the unrolled
+    * budget — callers who rely on that must check `converged` (q169
+    * throws loudly if not, the clusterPairs precedent).
+    *
+    * @param pairs distinct undirected edges (a, b), non-null, any
+    *              canonical order
     * @return FixpointResult whose table is (node, core_deg: long) — the
-    *         degree WITHIN the k-core, for surviving nodes only */
+    *         degree WITHIN the k-core, for surviving nodes only; `node`
+    *         keeps the type of the (a, b) columns */
   def kCore(pairs: DataFrame, k: Int, maxRounds: Int,
       broadcastDropMax: Long = 1L << 22): FixpointResult = {
     require(k >= 1, s"k must be >= 1; got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1; got $maxRounds")
-    // The symmetric edge table is materialized ONCE partitioned by src
-    // (width pinned — the bfsHopsWithStatus rule) and each round peels by
-    // DROPPED nodes, not by surviving ones:
-    //  - every edge endpoint appears as some src (both directions are
-    //    present), so anti-join on the dropped set ≡ semi-join on the
-    //    survivor set — exact, not a Bloom-style approximation;
-    //  - the dropped set is the small side (the peel fringe — pendant
-    //    nodes, not the surviving graph). While it fits the broadcast
-    //    budget both anti-joins broadcast, the edge table is never
-    //    re-shuffled, and localCheckpoint preserves the src partitioning,
-    //    so the NEXT round's degree aggregation is exchange-free too:
-    //    zero edge-sized shuffles per round (guide §2.4/§3.1). A fringe
-    //    past `broadcastDropMax` falls back to the shuffled anti-join for
-    //    that round (same result, executor-memory-safe at 100 TB where
-    //    round 1 can drop most of the graph).
-    //  - convergence = an empty drop set, detected BEFORE building the
-    //    next table: the confirming round pays one node-sized count, not
-    //    an edge-sized no-op rebuild. Round accounting is unchanged (the
-    //    confirming round still counts, the AnalyticsSpec contract).
-    val width = pairs.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    var edges = pairs.select(col("a").as("src"), col("b").as("dst"))
+    val spark = pairs.sparkSession
+    val sc = spark.sparkContext
+    val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .repartition(width, col("src"))
-      .localCheckpoint(true)
+    val bySrc = new HashPartitioner(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    var edges: RDD[(Any, Any)] =
+      sym.rdd.map(r => (r.get(0), r.get(1))).partitionBy(bySrc).localCheckpoint()
+    val collectMax = math.min(broadcastDropMax, Int.MaxValue - 1L).toInt + 1
+    var release: () => Unit = () => ()
     var round = 0
     var changed = true
     while (round < maxRounds && changed) {
       round += 1
-      val drop = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") < k).select(col("src").as("node"))
-        .localCheckpoint(true) // node-sized; read by the count + two joins
-      val nDrop = drop.count()
-      if (nDrop == 0) {
+      val drop = sc.runJob(edges, (it: Iterator[(Any, Any)]) =>
+        degrees(it).iterator.collect { case (n, d) if d < k => n }
+          .take(collectMax).toArray).flatten
+      release() // this round's table has materialized
+      if (drop.isEmpty) {
         changed = false
       } else {
-        val dropSide =
-          if (nDrop <= broadcastDropMax) (c: String) =>
-            broadcast(drop.withColumnRenamed("node", c))
-          else (c: String) => drop.withColumnRenamed("node", c)
-        edges = edges
-          .join(dropSide("src"), Seq("src"), "left_anti")
-          .join(dropSide("dst"), Seq("dst"), "left_anti")
-          .select(col("src"), col("dst"))
-          .localCheckpoint(true)
+        val prev = edges
+        val next = if (drop.length <= broadcastDropMax) {
+          val dropped = sc.broadcast(drop.toSet)
+          release = () => { prev.unpersist(blocking = false); dropped.unpersist() }
+          prev.mapPartitions(
+            _.filter { case (s, d) => !dropped.value(s) && !dropped.value(d) },
+            preservesPartitioning = true)
+        } else {
+          release = () => prev.unpersist(blocking = false)
+          val reversed = prev.mapPartitions { it =>
+            val part = it.toArray
+            val deg = degrees(part.iterator)
+            part.iterator.collect { case (s, d) if deg(s) >= k => (d, s) }
+          }.partitionBy(bySrc)
+          prev.zipPartitions(reversed, preservesPartitioning = true) { (mine, in) =>
+            val deg = degrees(mine)
+            in.filter { case (s, _) => deg.getOrElse(s, 0L) >= k }
+          }
+        }
+        edges = next.localCheckpoint()
       }
     }
-    val core = edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("core_deg"))
-    FixpointResult(core, converged = !changed, roundsRun = round)
+    val core = edges.mapPartitions(
+      degrees(_).iterator.map { case (n, d) => Row(n, d) },
+      preservesPartitioning = true)
+    val schema = StructType(Seq(sym.schema("src").copy(name = "node"),
+      StructField("core_deg", LongType, nullable = false)))
+    FixpointResult(spark.createDataFrame(core, schema), converged = !changed,
+      roundsRun = round)
+  }
+
+  /** Out-degree per src over one partition of an edge table. */
+  private def degrees(it: Iterator[(Any, Any)]): mutable.HashMap[Any, Long] = {
+    val deg = mutable.HashMap.empty[Any, Long]
+    it.foreach { case (s, _) => deg(s) = deg.getOrElse(s, 0L) + 1L }
+    deg
   }
 
   /** Connected components over an undirected pair list — the graph-family
@@ -268,9 +291,9 @@ object Graph {
     * instead of paying them. The early exit cannot change the result.
     * `converged = false` means the round budget ran out while distances
     * were still improving — the caller is holding a ≤rounds-edge
-    * approximation, not the true shortest paths — and a loud stderr line
-    * says so (an unconverged table is otherwise indistinguishable from a
-    * converged one). */
+    * approximation, not the true shortest paths. That is a fact about the
+    * result, not an error: a bounded-hop query (q148's 3 rounds) asks for
+    * exactly that approximation, so the flag is the only report. */
   def ssspWithStatus(edges: DataFrame, seeds: DataFrame,
       rounds: Int): FixpointResult = {
     import graft.CacheLifecycle.TrackedPersistOps
@@ -302,12 +325,7 @@ object Graph {
         .limit(1).count() > 0
       dist = next
     }
-    val converged = !changed
-    if (!converged)
-      System.err.println(s"[graft] sssp: round budget $rounds exhausted " +
-        "while distances were still improving — result is a bounded-hop " +
-        "approximation, not the converged shortest paths")
-    FixpointResult(dist, converged, round)
+    FixpointResult(dist, converged = !changed, round)
   }
 
   /** Breadth-first hop distances from a seed set — the frontier-expansion

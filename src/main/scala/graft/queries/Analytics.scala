@@ -846,7 +846,8 @@ object Analytics {
   // fixpoint with convergence ASSERTED — if data drift ever needed more
   // than the unrolled budget the query throws loudly (the clusterPairs
   // precedent) instead of hash-mismatching. Exact integer degrees
-  // end-to-end; per round one degree agg + two semi-joins, edge-bounded.
+  // end-to-end; one Spark job per peel round over a src-partitioned edge
+  // table, no edge shuffle while the drop set fits a broadcast.
   def q169(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val pairs = graft.operators.CoPurchase.pairs(s, d, minSupp = 2)

@@ -238,6 +238,24 @@ class AnalyticsSpec extends AnyFunSuite {
       10L -> 10L, 11L -> 10L, 12L -> 10L), s"got $got")
   }
 
+  /** Spark jobs one warm run of a query and its collect takes. */
+  private def warmJobs(q: String): Int = {
+    SparkEntry.queries(q)(spark, sf).collect() // stages the co-purchase graph
+    org.apache.spark.JobCount(spark.sparkContext) {
+      SparkEntry.queries(q)(spark, sf).collect()
+    }._2
+  }
+
+  test("q169 k-core runs at most 4 Spark jobs at sf0.001") {
+    val jobs = warmJobs("q169_kcore")
+    assert(jobs <= 4, s"q169 ran $jobs jobs")
+  }
+
+  test("q170 connected components run at most 2 Spark jobs at sf0.001") {
+    val jobs = warmJobs("q170_connected_components")
+    assert(jobs <= 2, s"q170 ran $jobs jobs")
+  }
+
   test("q174 plans its rank cut as WindowGroupLimit above the bounded slice") {
     // the pre-limit cut must plan as WindowGroupLimit (each map task keeps
     // only its top-100 per priority before the shuffle) — the q132 rule;

@@ -164,4 +164,35 @@ object DedupProps extends Properties("graft.dedup") {
       }.toMap
       got == expect
     }
+
+  // random pair graphs over ids 0–39: chains (deep components) plus random
+  // edges (merges between them), shuffled so no partition sees a whole chain
+  private val pairGraphGen: Gen[List[(Long, Long)]] = for {
+    chains <- Gen.listOfN(3, Gen.chooseNum(0, 12).flatMap(len =>
+      Gen.chooseNum(0, 39 - len).map(s => (s until s + len).map(i => (i, i + 1)))))
+    extra <- Gen.listOf(Gen.zip(Gen.chooseNum(0, 39), Gen.chooseNum(0, 39)))
+    edges = chains.flatten ++ extra.take(20)
+    keys <- Gen.listOfN(edges.size, Gen.long)
+  } yield edges.zip(keys).sortBy(_._2).map { case ((a, b), _) => (a.toLong, b.toLong) }
+
+  property("clusterPairs equals a naive union-find at one and many partitions") =
+    forAll(pairGraphGen, Gen.chooseNum(1, 8)) { (edges, parts) =>
+      import spark.implicits._
+      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+      def find(x: Long): Long = { val p = parent.getOrElse(x, x); if (p == x) x else find(p) }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+      val expect = nodes.map(n => (n, find(n), n == find(n))).toSet
+      val pairs = edges.toDF("doc_a", "doc_b").repartition(parts)
+      // the default budget contracts in one partition; a budget of one edge
+      // per task keeps every partition and runs the residual rounds
+      Seq(1000000L, 1L).forall { budget =>
+        Dedup.clusterPairs(pairs, maxIterations = 40, edgesPerTask = budget)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+          .toSet == expect
+      }
+    }
 }

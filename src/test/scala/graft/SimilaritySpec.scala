@@ -112,11 +112,14 @@ class SimilaritySpec extends AnyFunSuite {
     // a single 400-edge chain scattered over 16 partitions: partition-local
     // union-find contracts each partition's fragment to a star, and the
     // global rounds must still stitch the fragments (the spanning case one
-    // partition can't see) — every node's rep is the global minimum 0
+    // partition can't see) — every node's rep is the global minimum 0. A
+    // budget of one edge per task keeps all 16 partitions; the default
+    // budget would contract this graph in one.
     val chain = (0L until 400L).map(i => (i, i + 1))
     val pairs = scala.util.Random.shuffle(chain).toDF("doc_a", "doc_b")
       .repartition(16)
-    val got = Dedup.clusterPairs(pairs).collect()
+    val got = Dedup.clusterPairs(pairs, maxIterations = 40, edgesPerTask = 1L)
+      .collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got.size == 401)
     assert(got.values.forall(_ == 0L), "all chain nodes must adopt rep 0")
