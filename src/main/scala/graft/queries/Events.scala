@@ -2133,30 +2133,22 @@ object Events {
   // merge touches profile-sized state (distinct keys), never history.
   def q223(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     val base = graft.TempDirs.fresh("graft_cdc")
     val table = s"$base/table"
-    val q = graft.streaming.Streams.eventsStream(s, d)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val partials = batch.groupBy(col("user_id"))
-          .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
-            col("value"))).as("l"),
-            count(lit(1)).as("n_updates"))
-          .select(col("user_id"), col("l.ts").as("ts"),
-            col("l.event_id").as("event_id"),
-            col("l.event_type").as("last_type"),
-            col("l.value").as("last_val"), col("n_updates"))
-        graft.streaming.Rollup.mergeLatestInto(s, partials, table,
-          keys = Seq("user_id"), orderCols = Seq("ts", "event_id"),
-          sumCols = Seq("n_updates"), batchId = id)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+    graft.streaming.Streams.drainBatches(graft.streaming.Streams.eventsStream(s, d),
+        s"$base/ckpt") { (batch, id) =>
+      val partials = batch.groupBy(col("user_id"))
+        .agg(max(struct(col("ts"), col("event_id"), col("event_type"),
+          col("value"))).as("l"),
+          count(lit(1)).as("n_updates"))
+        .select(col("user_id"), col("l.ts").as("ts"),
+          col("l.event_id").as("event_id"),
+          col("l.event_type").as("last_type"),
+          col("l.value").as("last_val"), col("n_updates"))
+      graft.streaming.Rollup.mergeLatestInto(s, partials, table,
+        keys = Seq("user_id"), orderCols = Seq("ts", "event_id"),
+        sumCols = Seq("n_updates"), batchId = id)
+    }
     graft.streaming.Rollup.readRollup(s, table)
       .select($"user_id", fmtS(expr("ts div 1000000000")).as("last_s"),
         $"last_type", $"last_val", $"n_updates")

@@ -1659,17 +1659,11 @@ object Extended {
       ev.repartition(2).write.parquet(s"$p/backlog")
       val stream = s.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$p/backlog")
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$p/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val partial = kllFlat(batch.groupBy($"grp").agg(kll($"v").as("sk")))
-          graft.streaming.Rollup.mergeStateInto(s, partial,
-            s"$p/sketch_table", id)(combine)
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      graft.streaming.Streams.drainBatches(stream, s"$p/ckpt") { (batch, id) =>
+        val partial = kllFlat(batch.groupBy($"grp").agg(kll($"v").as("sk")))
+        graft.streaming.Rollup.mergeStateInto(s, partial,
+          s"$p/sketch_table", id)(combine)
+      }
     }
     kllServe(s,
       graft.streaming.Rollup.readRollup(s, s"$staged/sketch_table"),

@@ -1109,14 +1109,9 @@ object Vectors {
         .write.parquet(s"$p/delta")
       val stream = s.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$p/delta")
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$p/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.sources.VectorIndex.append(s, batch, s"$p/index")
-        }
-        .start()
-      q.awaitTermination()
+      graft.streaming.Streams.drainBatches(stream, s"$p/ckpt") { (batch, _) =>
+        graft.sources.VectorIndex.append(s, batch, s"$p/index")
+      }
     }
     graft.sources.VectorIndex.probeTopK(s, s"$staged/index",
         Tables.embeddings(s, d).filter($"vec_id" < 8), m = 4, k = 5, nprobe = 3)
@@ -3491,17 +3486,11 @@ object Vectors {
       stamp(listDelta() -- batchA, t0 + 120000)
       val stream = s.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", 1).parquet(s"$p/delta")
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$p/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          graft.sources.NeighborGraph.append(s, s"$p/graph", batch, emb,
-            m = 12, beamWidth = 16, rounds = 5, nBuckets = 16, nEntries = 8,
-            bulkHint = Some(false)) // micro-batches are bounded by source
-          ()
-        }
-        .start()
-      q.awaitTermination()
+      graft.streaming.Streams.drainBatches(stream, s"$p/ckpt") { (batch, _) =>
+        graft.sources.NeighborGraph.append(s, s"$p/graph", batch, emb,
+          m = 12, beamWidth = 16, rounds = 5, nBuckets = 16, nEntries = 8,
+          bulkHint = Some(false)) // micro-batches are bounded by source
+      }
     }
 
   def q361(s: SparkSession, d: String): DataFrame = {

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
 /** Incrementally-maintained aggregate table — the "streaming materialized
   * view" production pattern: each micro-batch's PARTIAL aggregates merge
@@ -257,18 +256,10 @@ object Rollup {
     * source position, and the versioned commit absorbs any replayed batch. */
   def hourlyRollupSink(spark: SparkSession, dir: String, tablePath: String,
       checkpointDir: String, glob: String = "events.parquet",
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val q = Streams.eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      .writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeInto(spark, hourlyPartials(batch), tablePath,
-          Seq("event_type", "hour_start"), id)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.drainBatches(Streams.eventsStream(spark, dir, glob, maxFilesPerTrigger),
+        checkpointDir) { (batch, id) =>
+      mergeInto(spark, hourlyPartials(batch), tablePath,
+        Seq("event_type", "hour_start"), id)
+    }
 }

@@ -1,9 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileSystem, GlobFilter, Path}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoders => SEncoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, StreamingQueryProgress, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+import org.apache.spark.sql.types.StructType
 
 /** Structured Streaming surface — the unbounded-time-series form of the
   * reference's hourly poll (SURVEY.md §1.1: the "stream" is a cron-batched
@@ -26,9 +31,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Streams {
 
-  /** Streaming events source over a parquet directory. Schema is pinned
-    * from a batch read (streaming requires an explicit schema; ts arrives
-    * as long nanos, see Tables.events).
+  /** Streaming events source over a parquet directory. The schema is
+    * pinned through [[sourceSchema]] (streaming requires an explicit
+    * schema; ts arrives as long nanos, see Tables.events).
     *
     * `glob` selects which files in `dir` are part of the stream;
     * `maxFilesPerTrigger` caps files per micro-batch — Trigger.AvailableNow
@@ -38,10 +43,9 @@ object Streams {
   def eventsStream(spark: SparkSession, dir: String,
       glob: String = "events.parquet",
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
     // the testdata table is a single parquet file; the file stream source
     // needs a directory, so stream the parent with a glob filter
-    val reader = spark.readStream.schema(schema)
+    val reader = spark.readStream.schema(sourceSchema(spark, dir, glob))
       .option("pathGlobFilter", glob)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     // Same ts canonicalization as the batch loader (long epoch-ns,
@@ -53,10 +57,35 @@ object Streams {
 
   /** Generic single-table file stream over a dataset dir (the
     * [[eventsStream]] source shape without the events-specific ts
-    * canonicalization): schema from a batch read, parent-dir glob. */
-  def tableStream(spark: SparkSession, dir: String, glob: String): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    spark.readStream.schema(schema).option("pathGlobFilter", glob).parquet(dir)
+    * canonicalization): pinned schema, parent-dir glob. */
+  def tableStream(spark: SparkSession, dir: String, glob: String): DataFrame =
+    spark.readStream.schema(sourceSchema(spark, dir, glob))
+      .option("pathGlobFilter", glob).parquet(dir)
+
+  /** Schemas by (dir, glob), each with the fingerprint of the files it was
+    * inferred from. */
+  private val schemas =
+    new ConcurrentHashMap[(String, String), (Seq[(String, Long, Long)], StructType)]()
+
+  /** The schema a batch parquet read infers for `dir`'s files matching
+    * `glob`. Inference runs a Spark job, so the schema is memoized and
+    * inferred again only when the matching files' (name, length, mtime)
+    * fingerprint changes: a listing costs no job, and a file rewritten in
+    * place changes its length or mtime. Like every read here, the memo
+    * assumes the engine session's parquet confs (GraftSession). */
+  private[graft] def sourceSchema(spark: SparkSession, dir: String,
+      glob: String): StructType = {
+    val path = new Path(dir)
+    val files = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(path, new GlobFilter(glob))
+      .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+      .sorted.toSeq
+    Option(schemas.get((dir, glob))).collect { case (`files`, schema) => schema }
+      .getOrElse {
+        val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
+        schemas.put((dir, glob), (files, schema))
+        schema
+      }
   }
 
   /** Drain a stream through a per-micro-batch BATCH transform into an
@@ -71,17 +100,85 @@ object Streams {
     * exactly-once should write through Rollup.mergeInto's versioned
     * commit instead (batchId is passed through for that purpose). */
   def drainToParquet(stream: DataFrame, sinkPath: String,
-      checkpointDir: String)(perBatch: (DataFrame, Long) => DataFrame): Unit = {
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        perBatch(batch, id).write.mode("append").parquet(sinkPath)
-        ()
-      }
-      .start()
-    q.awaitTermination()
+      checkpointDir: String)(perBatch: (DataFrame, Long) => DataFrame): Unit =
+    drainBatches(stream, checkpointDir) { (batch, id) =>
+      perBatch(batch, id).write.mode("append").parquet(sinkPath)
+    }
+
+  /** Drain a stream's backlog (one AvailableNow pass, checkpointed at
+    * `checkpointDir`) through `perBatch`, the foreachBatch escape hatch;
+    * blocks until the backlog is drained. Runs through [[drain]]. */
+  def drainBatches(stream: DataFrame, checkpointDir: String)(
+      perBatch: (DataFrame, Long) => Unit): Unit =
+    drain(stream.sparkSession, stream, Some(checkpointDir))(_.foreachBatch(perBatch))
+
+  /** Start `df`'s stream as configured by `sink`, under AvailableNow, and
+    * block until the backlog is drained. The one place this codebase
+    * starts a stream. For the drain's lifetime only (restored in
+    * `finally`) the session carries `confs` plus [[drainConfs]], which
+    * remove two fixed costs every drain otherwise pays:
+    *
+    * - `spark.sql.artifact.isolation.enabled=false`. A streaming query
+    *   runs on a clone of the session, and with isolation on (Spark 4.1's
+    *   default) each clone gets its own artifact classloader. Generated
+    *   code is cached by (classloader, source), so every drain recompiled
+    *   its whole plan (14 classes for a warm q34) and ran it cold. The
+    *   engine adds no session artifacts (no addArtifact/addJar), so the
+    *   clone loses nothing by sharing the parent's classloader.
+    * - `spark.sql.streaming.checkpointFileManagerClass` set to
+    *   `FileSystemBasedCheckpointFileManager`, only for a local checkpoint
+    *   (see [[drainConfs]]). Spark's default manager renames through
+    *   Hadoop's FileContext, which without the native Hadoop library
+    *   forks a `readlink` process for each side of every rename (~11 ms a
+    *   fork). Both managers write a temporary file and rename it without
+    *   overwriting; Hadoop's `.crc` sidecars and Spark's checkpoint
+    *   checksums are written either way. On object stores
+    *   `FileSystem.rename` is not atomic, so other schemes keep the
+    *   default manager.
+    *
+    * CONSTRAINT: the conf swap is session-global for the drain's duration —
+    * a query planned concurrently in the SAME session would silently pick
+    * up the swapped confs. The bench/spec/Verify harnesses are strictly
+    * sequential; for concurrent use, pass a cloned session
+    * (`spark.newSession()`) so the mutation is scoped to the clone. */
+  private def drain(spark: SparkSession, df: DataFrame,
+      checkpointDir: Option[String], confs: Seq[(String, String)] = Nil)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery =
+    withConfs(spark, confs ++ drainConfs(spark, checkpointDir)) {
+      val w = sink(df.writeStream.trigger(Trigger.AvailableNow()))
+      val q = checkpointDir.fold(w)(w.option("checkpointLocation", _)).start()
+      q.awaitTermination()
+      q
+    }
+
+  /** The confs [[drain]] adds for a drain checkpointed at `checkpointDir`
+    * (None: Spark's own choice, the session's checkpoint root or a local
+    * temporary directory). The checkpoint manager is overridden only when
+    * the checkpoint resolves to the local filesystem: its own scheme, else
+    * the default filesystem's. */
+  private[graft] def drainConfs(spark: SparkSession,
+      checkpointDir: Option[String]): Seq[(String, String)] = {
+    val scheme = checkpointDir
+      .orElse(spark.conf.getOption("spark.sql.streaming.checkpointLocation"))
+      .flatMap(d => Option(new Path(d).toUri.getScheme))
+      .getOrElse(FileSystem.getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme)
+    val isolation = Seq("spark.sql.artifact.isolation.enabled" -> "false")
+    if (scheme != "file") isolation
+    else isolation :+ ("spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[FileSystemBasedCheckpointFileManager].getName)
+  }
+
+  /** Run `body` with `confs` set on the session; each key's previous value
+    * is restored (or the key unset) afterwards. */
+  private def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])(
+      body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Chained stateful aggregations in ONE streaming query — Spark's
@@ -469,39 +566,40 @@ object Streams {
       "leftSemi")
   }
 
+  /** Default drain state-partition count: 2, the round-13 audit's floor
+    * for SMALL-state one-shot drains. `SPARK_GRAFT_STATE_PARTS` overrides
+    * it, so partition sizing stays a deployment decision (guide §2.2). */
+  def defaultStatePartitions: Int =
+    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.toInt).getOrElse(2)
+
   /** Run a streaming DataFrame to completion against the backlog (one
     * AvailableNow pass), materialized in a memory sink; returns the sink
     * contents. Complete mode so closed-and-open windows are all visible —
     * batch-equivalence tests compare against the batch twin.
     *
-    * Stateful streaming cost scales with shuffle partitions (one state
-    * store instance — files, maintenance, commit — per partition per
-    * stateful operator), not with data: a one-shot drain of a small
-    * backlog pays 32 partitions of state machinery for rows that fit in
-    * 8. The session's shuffle-partition conf is lowered for the stream's
-    * lifetime and restored after the drain; results are
-    * partition-count-independent. On a real deployment this knob is the
-    * per-query sizing decision Spark exposes for exactly this reason.
+    * The drain goes through [[drain]], so it shares the parent session's
+    * compiled code and checkpoints (to a local temporary directory)
+    * without forking a shell per rename. On top of those confs, a memory
+    * drain sets two of its own for the drain's lifetime:
     *
-    * CONSTRAINT: the conf swap is session-global for the drain's duration —
-    * a query planned concurrently in the SAME session would silently pick up
-    * the lowered partition count. The bench/spec/Verify harnesses are
-    * strictly sequential; for concurrent use, pass a cloned session
-    * (`spark.newSession()`) so the mutation is scoped to the clone.
-    *
-    * SIZING: the default statePartitions = 2 is tuned for the audited
-    * one-shot drains of SMALL backlogs (every graded query here — round
-    * 13 floor audit). A caller draining large state must pass
-    * statePartitions explicitly: 2 partitions means 2 state-store
-    * instances carrying the whole state, the exact reducer-bottleneck
-    * shape the 32-partition default exists to avoid at scale. */
-  /** Default drain state-partition count. 2 was the round-13 audit's
-    * floor for SMALL-state one-shot drains; env-overridable so partition
-    * sizing stays a deployment decision (guide §2.2), and so the sizing
-    * sweep (QTime) can probe without a rebuild. */
-  def defaultStatePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTS").map(_.toInt).getOrElse(2)
-
+    * - `spark.sql.shuffle.partitions = statePartitions`. Stateful
+    *   streaming cost scales with shuffle partitions (one state store
+    *   instance — files, maintenance, commit — per partition per stateful
+    *   operator), not with data: a one-shot drain of a small backlog would
+    *   pay 32 partitions of state machinery for rows that fit in 8.
+    *   Results are partition-count-independent. The default of 2 suits
+    *   SMALL backlogs (every graded query here); a caller draining large
+    *   state must pass statePartitions explicitly, since 2 state-store
+    *   instances carrying the whole state is the reducer-bottleneck shape
+    *   the wide default exists to avoid at scale.
+    * - `spark.sql.streaming.noDataMicroBatches.enabled = noDataBatch`.
+    *   false skips the trailing no-data micro-batch — ONLY sound for
+    *   drains whose results are complete after the data batches (inner
+    *   joins, Complete-mode aggs): watermark-driven emission (append-mode
+    *   windows, outer-join null extension) HAPPENS in that batch, so those
+    *   queries must leave it on. For an eligible drain it removes a whole
+    *   batch's fixed cost (~0.6s at local[32] — the round-13 floor audit's
+    *   one >20% lever). */
   def runToMemory(spark: SparkSession, df: DataFrame, name: String,
       mode: OutputMode = OutputMode.Complete(),
       statePartitions: Int = defaultStatePartitions,
@@ -515,40 +613,19 @@ object Streams {
   def runToMemoryTracked(spark: SparkSession, df: DataFrame, name: String,
       mode: OutputMode = OutputMode.Complete(),
       statePartitions: Int = defaultStatePartitions,
-      noDataBatch: Boolean = true): (DataFrame,
-        Array[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
+      noDataBatch: Boolean = true): (DataFrame, Array[StreamingQueryProgress]) = {
     // Re-registering a sink name drops the previous invocation's temp view
     // first: the memory sink retains its full materialized result for the
     // session's lifetime, so without the drop every re-run (bench runs each
     // query 2-3 times, specs and Verify again in the same session) leaked
     // another copy into driver memory.
     spark.catalog.dropTempView(name)
-    // noDataBatch=false skips the trailing no-data micro-batch — ONLY
-    // sound for drains whose results are complete after the data batches
-    // (inner joins, Complete-mode aggs): watermark-driven emission
-    // (append-mode windows, outer-join null extension) HAPPENS in that
-    // batch, so those queries must leave it on. For an eligible drain it
-    // removes a whole batch's fixed cost (~0.6s at local[32] — the
-    // round-13 floor audit's one >20% lever).
-    val keys = Seq(
+    val q = drain(spark, df, None, Seq(
       "spark.sql.shuffle.partitions" -> statePartitions.toString,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString)
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    val progress = try {
-      val q = df.writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> noDataBatch.toString)) {
+      _.outputMode(mode).format("memory").queryName(name)
     }
-    (spark.table(name), progress)
+    (spark.table(name), q.recentProgress)
   }
 
   def runDatasetToMemory[T](spark: SparkSession, ds: Dataset[T], name: String,
@@ -660,8 +737,8 @@ object Streams {
     import spark.implicits._
     import graft.functions.TextFunctions.tokens
     val rowsPerBand = numPerm / bands
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir).schema
-    val reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
+    val reader = spark.readStream.schema(sourceSchema(spark, dir, glob))
+      .option("pathGlobFilter", glob)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     // Tokenization stays Catalyst (tokens = the repo-wide normalizeText +
     // split — reimplementing its regex/lowercase semantics in Scala would
@@ -755,20 +832,12 @@ object Streams {
     * upload the batch's delta instead of a full snapshot, the round-13
     * floor-audit lever for the state-store query family. Both confs are
     * restored afterwards so the session's other streams are untouched. */
-  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val keys = Seq(
+  private def withRocksDb[T](spark: SparkSession)(body: => T): T =
+    withConfs(spark, Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-        "true")
-    val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+        "true"))(body)
 
   /** Streaming heavy hitters — a SpaceSaving summary (Metwally, Agrawal &
     * El Abbadi 2005, "Efficient Computation of Frequent and Top-k Elements
@@ -867,16 +936,8 @@ object Streams {
     * checkpoint recovery. This is the foreachBatch pattern the Tier-B
     * "Sinks" row calls for. Blocks until the AvailableNow backlog drains. */
   def upsertSink(stream: DataFrame, tablePath: String, keys: Seq[String],
-      checkpointDir: String): Unit = {
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.etl.Upsert.intoParquet(batch.sparkSession, batch, tablePath, keys)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-  }
+      checkpointDir: String): Unit =
+    drainBatches(stream, checkpointDir) { (batch, _) =>
+      graft.etl.Upsert.intoParquet(batch.sparkSession, batch, tablePath, keys)
+    }
 }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.streaming.Streams
 
 class StreamingSpec extends AnyFunSuite {
@@ -680,5 +681,106 @@ class StreamingSpec extends AnyFunSuite {
     // default retention unchanged: a fourth merge without the flag prunes to 1
     streaming.Rollup.mergeInto(spark, batch(3), tp, Seq("key"), 3L)
     assert(streaming.Rollup.versions(spark, tp) == Seq(3L))
+  }
+
+  test("a warm q34 drain compiles no code and runs no schema job") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run() = {
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val (rows, jobs) = org.apache.spark.JobCount(spark.sparkContext) {
+        queries.Events.q34(spark, sf).collect().toSeq
+      }
+      (rows, jobs, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles)
+    }
+    val (cold, _, _) = run()
+    val (warm, warmJobs, warmCompiles) = run()
+    assert(warm == cold, "a warm drain changed q34's output")
+    val batch = queries.Events.q24(spark, sf)
+      .select("hour_start", "event_type", "n_events", "sum_value").collect().toSet
+    assert(warm.toSet == batch, "q34 diverged from its batch twin q24")
+    // the drain's cloned session shares the parent's classloader, so every
+    // generated class hits the codegen cache (14 compiles per drain when
+    // each clone had its own artifact classloader)
+    assert(warmCompiles == 0, s"a warm q34 compiled $warmCompiles classes")
+    // the memoized source schema leaves the drain and the sink read: 4
+    // jobs, 5 when eventsStream inferred the schema on every call
+    assert(warmJobs <= 4, s"a warm q34 ran $warmJobs jobs")
+  }
+
+  test("only a local checkpoint gets the filesystem checkpoint manager") {
+    import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+    val manager = "spark.sql.streaming.checkpointFileManagerClass"
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    for (d <- Seq(Some("/tmp/ckpt"), Some("file:/tmp/ckpt"), None)) {
+      val confs = Streams.drainConfs(spark, d).toMap
+      assert(confs.get(manager).contains(
+        classOf[FileSystemBasedCheckpointFileManager].getName), s"$d")
+      assert(confs.get(isolation).contains("false"), s"$d")
+    }
+    for (d <- Seq("s3a://bucket/ckpt", "hdfs://namenode:8020/ckpt")) {
+      val confs = Streams.drainConfs(spark, Some(d)).toMap
+      assert(!confs.contains(manager), s"$d must keep Spark's default manager")
+      assert(confs.get(isolation).contains("false"), d)
+    }
+  }
+
+  test("a drain restarted from its checkpoint sinks each row exactly once") {
+    val base = TempDirs.fresh("graft_restart").toString
+    val (src, sink, ckpt) = (s"$base/src", s"$base/sink", s"$base/ckpt")
+    val ev = Tables.events(spark, sf).select("event_id", "user_id", "event_type")
+    val even = col("event_id") % 2 === 0
+    def addFile(rows: org.apache.spark.sql.Column): Unit =
+      ev.filter(rows).coalesce(1).write.mode("append").parquet(src)
+    // the dedup only makes the drain stateful (state files carry Spark's
+    // checksums); keyed by the drain's number, it cannot hide a replay
+    def drainAll(run: Int): Unit = Streams.drainToParquet(
+        Streams.tableStream(spark, src, "*.parquet")
+          .withColumn("run", lit(run)).dropDuplicates("event_id", "run"),
+        sink, ckpt)((batch, _) => batch)
+    addFile(even)
+    drainAll(1)
+    addFile(!even)
+    drainAll(2)
+    val got = spark.read.parquet(sink).select("event_id", "run").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toSeq
+    val want = ev.select("event_id").collect()
+      .map(r => r.getLong(0) -> (if (r.getLong(0) % 2 == 0) 1 else 2)).toSeq
+    val (extra, missing) = (got diff want, want diff got)
+    val exact = extra.isEmpty && missing.isEmpty
+    assert(exact, "a restarted drain lost rows, " +
+      s"repeated them or re-read the first file: extra ${extra.take(5)}, " +
+      s"missing ${missing.take(5)}")
+    val files = {
+      val st = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+      try st.iterator().asScala.map(_.getFileName.toString).toSeq finally st.close()
+    }
+    // Hadoop's sidecars are hidden (.name.crc); Spark's checkpoint
+    // checksums sit beside their file (name.crc)
+    assert(files.exists(f => f.startsWith(".") && f.endsWith(".crc")),
+      s"no .crc sidecars in $files")
+    assert(files.exists(f => !f.startsWith(".") && f.endsWith(".crc")),
+      s"no checkpoint checksum files in $files")
+  }
+
+  test("the memoized source schema follows a file rewritten in place") {
+    val base = TempDirs.fresh("graft_schema_memo")
+    val file = base.resolve("events.parquet")
+    def place(df: org.apache.spark.sql.DataFrame): Unit = {
+      val tmp = base.resolve(s"w${System.nanoTime}").toString
+      df.coalesce(1).write.parquet(tmp)
+      val part = {
+        val st = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
+        try st.iterator().asScala.find(_.getFileName.toString.endsWith(".parquet")).get
+        finally st.close()
+      }
+      java.nio.file.Files.move(part, file,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    val ev = spark.read.parquet(s"$sf/events.parquet").limit(10)
+    place(ev)
+    assert(!Streams.eventsStream(spark, base.toString).columns.contains("extra"))
+    place(ev.withColumn("extra", lit(1L)))
+    assert(Streams.eventsStream(spark, base.toString).columns.contains("extra"),
+      "eventsStream kept the schema of the file it replaced")
   }
 }
