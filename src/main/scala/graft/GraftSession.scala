@@ -41,4 +41,20 @@ object GraftSession {
       .config("spark.ui.enabled", false)
       .getOrCreate()
   }
+
+  /** Run `body` with `confs` set on the session; each key's previous value
+    * is restored, or the key unset if it had none, afterwards. The swap is
+    * session-global for the body's duration: a query planned concurrently
+    * in the SAME session picks up the swapped confs, so a concurrent caller
+    * passes a cloned session (`spark.newSession()`). */
+  def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])(
+      body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

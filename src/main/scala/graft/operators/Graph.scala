@@ -48,33 +48,18 @@ object Graph {
     * bit-identical to the uncorrected formulation. The per-round dangling
     * total is a one-row broadcast — no extra node-keyed shuffle.
     *
-    * Iteration hygiene: each round's node-sized rank table is eagerly
-    * localCheckpointed. Without it the NEXT round embeds the previous
-    * round's plan twice (once under the dangling-mass aggregate, once
-    * under the contribution join) — a 2^iters logical-plan blowup whose
-    * duplicated exchanges AQE re-plans and re-executes as separate query
-    * stages (measured round 15: the lazy 2-round form executed a 253-node
-    * adaptive plan in ~3.1 s where the checkpointed form runs ~1.2 s on
-    * identical output). One extra node-sized job per round buys linear
-    * lineage; values are unchanged — checkpointing only cuts lineage.
+    * Iteration hygiene: the edge table is [[Fixpoint.srcPartitioned]],
+    * so the out-degree aggregation and every round's contribution join
+    * read it exchange-free, and the rounds run through [[Fixpoint.rounds]],
+    * which checkpoints each round's node-sized rank table (one extra
+    * node-sized job per round buys linear lineage).
     *
     * @param edges directed (src, dst) pairs, pre-deduplicated
     * @return (node, deg: long, pr9: long) — rank on the 1e-9 grid; one
     *         row for EVERY node in src ∪ dst, sinks included */
   def pageRank(edges: DataFrame, iters: Int): DataFrame = {
     import graft.CacheLifecycle.TrackedPersistOps
-    require(iters >= 0, s"iters must be >= 0; got $iters")
-    // Edge table materialized ONCE, pre-partitioned and pre-sorted on the
-    // per-round join key (the bfsHopsWithStatus rule, width pinned): the
-    // caller's upstream edge pipeline runs once instead of once per
-    // round, the out-degree aggregation is exchange-free, and every
-    // round's contribution join reads the edge side exchange- and
-    // sort-free from the cache.
-    val e = edges.repartition(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("src"))
-      .sortWithinPartitions(col("src"))
-      .persistTracked()
+    val e = Fixpoint.srcPartitioned(edges)
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
@@ -85,10 +70,7 @@ object Graph {
     val init = nodes.crossJoin(broadcast(nV))
       .select(col("node"), col("deg"),
         round(lit(1e9) / col("v")).cast("long").as("pr9"))
-    (0 until iters).foldLeft(init) { (pr0, it) =>
-      // node-sized checkpoint per round (see scaladoc); the LAST round
-      // stays lazy — its two consumers are the caller's single action
-      val pr = if (iters > 1) pr0.localCheckpoint(true) else pr0
+    Fixpoint.rounds(init, iters) { pr =>
       // sink mass this round — exact integer sum, one broadcast row
       // (coalesce: a sink-free graph aggregates over zero rows → NULL)
       val dang = pr.filter(col("deg") === 0)
@@ -270,62 +252,39 @@ object Graph {
     *
     * Per round: one src-keyed join (candidates fan out along edges) + one
     * node-keyed min aggregation with map-side combine — two shuffles,
-    * both node/edge-bounded; the distance table is node-sized and eagerly
-    * localCheckpointed (the frontier-algorithm lineage rule). `rounds`
-    * bounds path length: round r holds exact distances over paths of
-    * ≤ r edges (full convergence needs |V|−1 rounds; scoring passes use
-    * small bounds).
+    * both node/edge-bounded; the edge side reads the
+    * [[Fixpoint.srcPartitioned]] cache. `rounds` bounds path length:
+    * round r holds exact distances over paths of ≤ r edges (full
+    * convergence needs |V|−1 rounds; scoring passes use small bounds).
     *
-    * @param edges (src, dst, w) directed, integer weights ≥ 0
-    * @param seeds (node) — distance-0 sources
-    * @return (node, dist) minimal ≤rounds-edge path weight per reached node */
-  def sssp(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame =
-    ssspWithStatus(edges, seeds, rounds).result
-
-  /** [[sssp]] plus convergence detection (the q82 clusterPairs loud-cap
-    * precedent applied to Bellman-Ford): after each relaxation round the
-    * new distance table — already materialized by its localCheckpoint —
-    * is anti-joined against the previous one on (node, dist); an empty
-    * difference means a fixpoint (no node gained a first or shorter
-    * path), every later round is a no-op, and the loop exits early
-    * instead of paying them. The early exit cannot change the result.
+    * The loop is [[Fixpoint.untilStable]]: the old distance rows are
+    * tagged in the union (the Upsert.groupThenAppend pattern), so the
+    * round's own aggregation marks the nodes first reached or whose
+    * minimum dropped, and a round with none is the fixpoint.
     * `converged = false` means the round budget ran out while distances
     * were still improving — the caller is holding a ≤rounds-edge
     * approximation, not the true shortest paths. That is a fact about the
     * result, not an error: a bounded-hop query (q148's 3 rounds) asks for
-    * exactly that approximation, so the flag is the only report. */
-  def ssspWithStatus(edges: DataFrame, seeds: DataFrame,
-      rounds: Int): FixpointResult = {
-    import graft.CacheLifecycle.TrackedPersistOps
-    require(rounds >= 0, s"rounds must be >= 0; got $rounds")
-    // pre-partitioned + sorted on the per-round join key — see
-    // [[bfsHopsWithStatus]]: each relaxation round reads the edge side of
-    // its join exchange-free and sort-free from the cache. Width pinned
-    // explicitly: an un-numbered repartition is AQE-coalescible, and a
-    // cached layout whose partition count drifts from the frontier side's
-    // silently re-shuffles the edge table every round.
-    val e = edges.repartition(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("src"))
-      .sortWithinPartitions(col("src"))
-      .persistTracked()
-    var dist = seeds.select(col("node"), lit(0L).as("dist")).localCheckpoint(true)
-    var round = 0
-    var changed = true
-    while (round < rounds && changed) {
-      round += 1
-      val relax = e.join(dist, e("src") === dist("node"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      val next = dist.unionByName(relax)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
-      // both sides are checkpointed node-bounded tables — the anti-join
-      // is a cheap local probe, not a recomputation of the round
-      changed = next.join(dist, Seq("node", "dist"), "left_anti")
-        .limit(1).count() > 0
-      dist = next
+    * exactly that approximation, so the flag is the only report.
+    *
+    * @param edges (src, dst, w) directed, integer weights ≥ 0
+    * @param seeds (node) — distance-0 sources
+    * @return FixpointResult whose table is (node, dist): the minimal
+    *         ≤rounds-edge path weight per reached node */
+  def sssp(edges: DataFrame, seeds: DataFrame, rounds: Int): FixpointResult = {
+    val e = Fixpoint.srcPartitioned(edges)
+    val old = "__sssp_old"
+    Fixpoint.untilStable(seeds.select(col("node"), lit(0L).as("dist")), rounds) {
+      (dist, _) =>
+        val relax = e.join(dist, e("src") === dist("node"))
+          .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"),
+            lit(false).as(old))
+        dist.withColumn(old, lit(true)).unionByName(relax)
+          .groupBy(col("node"))
+          .agg(min(col("dist")).as("dist"), min(when(col(old), col("dist"))).as(old))
+          .select(col("node"), col("dist"),
+            (col(old).isNull || col("dist") < col(old)).as(Fixpoint.Changed))
     }
-    FixpointResult(dist, converged = !changed, round)
   }
 
   /** Breadth-first hop distances from a seed set — the frontier-expansion
@@ -333,66 +292,31 @@ object Graph {
     * states the WITH RECURSIVE form; this computes the identical min-hop
     * table iteratively, the standard Pregel/GraphFrames BFS shape).
     *
-    * Round h: join the (h−1)-frontier against edges (src-keyed shuffle),
-    * distinct the neighbor set, anti-join out already-reached nodes, tag
-    * survivors hop h. The reached table is node-bounded and eagerly
-    * localCheckpointed every round — frontier algorithms are the textbook
-    * lineage-explosion case (round h's plan would otherwise nest all
-    * previous rounds). `maxHops` bounds the loop, and an EMPTY frontier
-    * ends it early: once no fresh nodes appear, every later round is a
-    * no-op, so the early exit cannot change the result.
-    *
-    * @param seeds (node) — hop-0 nodes
-    * @return (node, hop) — minimal hop count ≤ maxHops per reached node */
-  def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
-    bfsHopsWithStatus(edges, seeds, maxHops).result
-
-  /** [[bfsHops]] plus convergence detection: counts each round's frontier
-    * (a cheap filter over the just-checkpointed reached table) and exits
-    * as soon as it is empty. `converged = true` means the reachable set
-    * was fully explored within the budget; `false` means the last
+    * Round h: join the (h−1)-frontier against the
+    * [[Fixpoint.srcPartitioned]] edges, distinct the neighbor set,
+    * anti-join out already-reached nodes, tag survivors hop h. The rows at
+    * hop h are the round's changed rows ([[Fixpoint.untilStable]]): an
+    * EMPTY frontier ends the loop. `converged = true` means the reachable
+    * set was fully explored within the budget; `false` means the last
     * frontier was still non-empty at `maxHops` — there may be unreached
     * nodes beyond the horizon, which is the intended semantics for
     * bounded-radius queries (q145's 3-hop ball) but a silent truncation
-    * for reachability closures, so the flag makes the difference loud. */
-  def bfsHopsWithStatus(edges: DataFrame, seeds: DataFrame,
-      maxHops: Int): FixpointResult = {
-    import graft.CacheLifecycle.TrackedPersistOps
-    require(maxHops >= 0, s"maxHops must be >= 0; got $maxHops")
-    // every round joins the frontier against the FULL edge table — persist
-    // it once or each round re-runs the caller's whole edge-building plan
-    // (measured: the un-persisted form re-ran a 1.2M-row pair self-join
-    // per hop, 4x the query cost). Persist it PRE-PARTITIONED AND SORTED
-    // on the join key: InMemoryTableScan preserves the cached plan's
-    // partitioning/ordering, so every hop's sort-merge join reads the
-    // edge side exchange-free and sort-free — the edge table crosses the
-    // wire once per QUERY, not once per hop (guide-§2.4 "shuffle once,
-    // reuse", the in-session form of a bucketed table; measured round 15:
-    // the per-hop form re-shuffled 48 MB over 3 hops at sf0.1). Width
-    // pinned explicitly — an un-numbered repartition is AQE-coalescible,
-    // and a cached layout whose partition count drifts from the frontier
-    // side's silently re-shuffles the edge table every hop.
-    val e = edges.repartition(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("src"))
-      .sortWithinPartitions(col("src"))
-      .persistTracked()
-    var reached = seeds.select(col("node"), lit(0).as("hop")).localCheckpoint(true)
-    var h = 0
-    var frontierNonEmpty = true
-    while (h < maxHops && frontierNonEmpty) {
-      h += 1
-      val frontier = reached.filter(col("hop") === h - 1)
-      val nbrs = e.join(frontier, e("src") === frontier("node"))
-        .select(col("dst").as("node")).distinct()
-      val fresh = nbrs.join(reached, Seq("node"), "left_anti")
-        .withColumn("hop", lit(h))
-      reached = reached.unionByName(fresh).localCheckpoint(true)
-      // reached is checkpointed — the frontier probe is a local scan
-      frontierNonEmpty =
-        reached.filter(col("hop") === h).limit(1).count() > 0
+    * for reachability closures, so the flag makes the difference loud.
+    *
+    * @param seeds (node) — hop-0 nodes
+    * @return FixpointResult whose table is (node, hop): the minimal hop
+    *         count ≤ maxHops per reached node */
+  def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): FixpointResult = {
+    val e = Fixpoint.srcPartitioned(edges)
+    Fixpoint.untilStable(seeds.select(col("node"), lit(0).as("hop")), maxHops) {
+      (reached, h) =>
+        val frontier = reached.filter(col("hop") === h - 1)
+        val fresh = e.join(frontier, e("src") === frontier("node"))
+          .select(col("dst").as("node")).distinct()
+          .join(reached, Seq("node"), "left_anti")
+          .withColumn("hop", lit(h))
+        reached.unionByName(fresh).withColumn(Fixpoint.Changed, col("hop") === h)
     }
-    FixpointResult(reached, converged = !frontierNonEmpty, roundsRun = h)
   }
 
   /** Personalized PageRank (Page et al. 1999 §6; the random walk with
@@ -417,12 +341,7 @@ object Graph {
       iters: Int): DataFrame = {
     import graft.CacheLifecycle.TrackedPersistOps
     require(iters >= 0, s"iters must be >= 0; got $iters")
-    // pre-partitioned + pre-sorted edge cache — see [[pageRank]]
-    val e = edges.repartition(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("src"))
-      .sortWithinPartitions(col("src"))
-      .persistTracked()
+    val e = Fixpoint.srcPartitioned(edges)
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
@@ -435,10 +354,7 @@ object Graph {
     require(nSeeds > 0, "personalizedPageRank: no seed appears in the graph")
     val init = nodes.select(col("node"), col("deg"), col("is_seed"),
       (col("is_seed") * lit(math.round(1e9 / nSeeds))).as("pr9"))
-    (0 until iters).foldLeft(init) { (pr0, _) =>
-      // node-sized checkpoint per round — the [[pageRank]] lineage rule
-      // (dang + contrib would otherwise embed the previous round twice)
-      val pr = if (iters > 1) pr0.localCheckpoint(true) else pr0
+    Fixpoint.rounds(init, iters) { pr =>
       val dang = pr.filter(col("deg") === 0)
         .agg(coalesce(sum(col("pr9")), lit(0L)).as("d9"))
       // only RANKED nodes contribute (a pr9 = 0 node's per-edge term is
@@ -476,7 +392,6 @@ object Graph {
     * @return (node, auth, hub) as decimal(38,0), every node in src ∪ dst */
   def hits(edges: DataFrame, iters: Int): DataFrame = {
     import graft.CacheLifecycle.TrackedPersistOps
-    require(iters >= 0, s"iters must be >= 0; got $iters")
     val big = "decimal(38,0)"
     // Plain edge cache: the upstream edge pipeline runs once instead of
     // twice per round. Unlike [[pageRank]], hits joins the edges on src
@@ -491,11 +406,10 @@ object Graph {
       .persistTracked()
     val init = nodes.select(col("node"),
       lit(1).cast(big).as("auth"), lit(1).cast(big).as("hub"))
-    (0 until iters).foldLeft(init) { (ah0, _) =>
-      // node-sized checkpoints per round — the [[pageRank]] lineage rule
-      // (withAuth feeds both the hub join and the final join, and ah
-      // feeds both score updates; lazy folding doubles the plan per round)
-      val ah = if (iters > 1) ah0.localCheckpoint(true) else ah0
+    // ah feeds both score updates, and withAuth feeds both the hub join
+    // and the final join: both are checkpointed, or lazy folding doubles
+    // the plan per round
+    Fixpoint.rounds(init, iters) { ah =>
       val auth = e.join(ah, e("src") === ah("node"))
         .groupBy(e("dst").as("node")).agg(sum(col("hub")).as("a"))
       val withAuth = (nodes.join(auth, Seq("node"), "left")
@@ -535,22 +449,13 @@ object Graph {
     * @return (node, label) for every node with ≥ 1 in-edge */
   def labelPropagation(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, s"iters must be >= 0; got $iters")
-    import graft.CacheLifecycle.TrackedPersistOps
-    // The edge table feeds every round's join plus the seed — materialize
-    // it ONCE, pre-partitioned and pre-sorted on the per-round join key
-    // (the bfsHopsWithStatus rule): the upstream edge pipeline (q196: a
-    // lineitem self-join + pair aggregation) runs once instead of once
-    // per round, and each round's sort-merge join reads the edge side
-    // exchange- and sort-free from the cache. Width pinned explicitly —
-    // an AQE-coalesced width could drift from the label side's and
-    // silently re-shuffle the cached table every round.
-    val e = edges.repartition(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("src"))
-      .sortWithinPartitions(col("src"))
-      .persistTracked()
+    // the edge table feeds every round's join plus the seed (q196: its
+    // upstream is a lineitem self-join + pair aggregation)
+    val e = Fixpoint.srcPartitioned(edges)
     val init = e.select(col("src").as("node")).distinct()
       .withColumn("label", col("node"))
+    // not [[Fixpoint.rounds]]: a round reads the previous labels once, so
+    // the lazy fold's plan grows linearly and needs no per-round checkpoint
     (0 until iters).foldLeft(init) { (lab, _) =>
       e.join(lab, e("src") === lab("node"))
         .groupBy(col("dst"), col("label"))
@@ -561,9 +466,3 @@ object Graph {
     }
   }
 }
-
-/** Outcome of a bounded-round graph fixpoint: the table, whether the
-  * fixpoint was actually reached within the budget, and how many rounds
-  * ran (early exit makes this ≤ the budget). */
-case class FixpointResult(result: DataFrame, converged: Boolean,
-  roundsRun: Int)

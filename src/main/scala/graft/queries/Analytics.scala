@@ -518,7 +518,7 @@ object Analytics {
     // seed = global min node; pairs are pa < pb, so min(pa) is it — reading
     // pairs, not edges, keeps the seed job off the operator's edge cache
     val seeds = pairs.agg(min($"pa").as("node"))
-    graft.operators.Graph.bfsHops(edges, seeds, maxHops = 3)
+    graft.operators.Graph.bfsHops(edges, seeds, maxHops = 3).result
       .orderBy($"hop", $"node")
   }
   val q145Sql: String =
@@ -586,7 +586,7 @@ object Analytics {
     val edges = wpairs.select($"pa".as("src"), $"pb".as("dst"), $"w")
       .unionByName(wpairs.select($"pb".as("src"), $"pa".as("dst"), $"w"))
     val seeds = pairs.agg(min($"pa").as("node"))
-    graft.operators.Graph.sssp(edges, seeds, rounds = 3)
+    graft.operators.Graph.sssp(edges, seeds, rounds = 3).result
       .orderBy($"dist", $"node")
   }
   private def ssspStep(prev: String): String =

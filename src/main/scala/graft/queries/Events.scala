@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Time-series / event-stream query pack over the `events` table.
   *
@@ -361,7 +361,7 @@ object Events {
   // exactly once.
   def q58(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val joined = graft.streaming.Streams.viewPurchaseIntervalJoin(s, d)
+    val joined = graft.streaming.Streams.viewPurchaseJoin(s, d, "inner")
     // inner join: every qualifying pair is emitted in the data batch
     // itself, so the trailing no-data micro-batch would only pay state
     // eviction for a query that is about to stop — skip it (the
@@ -876,34 +876,33 @@ object Events {
       |FROM s GROUP BY user_id, session_id
       |ORDER BY user_id, session_start""".stripMargin
 
+  /** Append-mode memory drain of an outer view-purchase join under
+    * multipleWatermarkPolicy=max: with the default min policy the
+    * cutoff-bounded outer side stalls the global watermark and its last
+    * retained row's null row never emits (see Streams.viewPurchaseJoin).
+    * Restored after the drain — the harnesses are strictly sequential
+    * (the runToMemory conf convention). */
+  private def outerDrain(s: SparkSession, joined: DataFrame,
+      sink: String): DataFrame =
+    GraftSession.withConfs(s,
+        Seq("spark.sql.streaming.multipleWatermarkPolicy" -> "max")) {
+      graft.streaming.Streams.runToMemory(s, joined, sink,
+        org.apache.spark.sql.streaming.OutputMode.Append())
+    }
+
   // --- q157: stream-stream LEFT OUTER interval join ------------------------
   // q58's inner join answers "which purchases followed a view"; the outer
   // form answers the ad-analytics question it cannot: "which views
   // CONVERTED, and which did not" — unmatched views emit null-extended
   // rows once the watermark proves no in-window purchase can still
-  // arrive. See Streams.viewPurchaseLeftOuterJoin for the cutoff
-  // machinery that makes a static-backlog drain complete. The oracle is
-  // the batch LEFT JOIN under the same µs-exact window and cutoff —
-  // null-completion semantics checked row-for-row at all SFs.
+  // arrive. See Streams.viewPurchaseJoin for the cutoff machinery that
+  // makes a static-backlog drain complete. The oracle is the batch LEFT
+  // JOIN under the same µs-exact window and cutoff — null-completion
+  // semantics checked row-for-row at all SFs.
   def q157(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val joined = graft.streaming.Streams.viewPurchaseLeftOuterJoin(s, d)
-    // multipleWatermarkPolicy=max for the drain: with the default min
-    // policy the cutoff-bounded view side stalls the global watermark and
-    // the last retained view's null row never emits (see
-    // Streams.viewPurchaseLeftOuterJoin). Restored after the drain — the
-    // harnesses are strictly sequential (the runToMemory conf convention).
-    val key = "spark.sql.streaming.multipleWatermarkPolicy"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "max")
-    val drained =
-      try graft.streaming.Streams.runToMemory(s, joined, "q157_sink",
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    drained
+    outerDrain(s, graft.streaming.Streams.viewPurchaseJoin(s, d, "leftOuter"),
+        "q157_sink")
       .select($"view_id", $"purchase_id",
         expr("(p_ns - v_ns) div 1000000000").as("delta_s"))
       .orderBy($"view_id", $"purchase_id")
@@ -928,22 +927,12 @@ object Events {
   // cannot ask: which purchases had NO view in the preceding hour. The
   // outer side flips to purchases (cutoff-bounded so every retained row
   // resolves; views stay unbounded to anchor the watermark — see
-  // Streams.viewPurchaseRightOuterJoin). Oracle: the batch RIGHT JOIN
-  // under the same µs-exact window and cutoff.
+  // Streams.viewPurchaseJoin). Oracle: the batch RIGHT JOIN under the
+  // same µs-exact window and cutoff.
   def q286(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val joined = graft.streaming.Streams.viewPurchaseRightOuterJoin(s, d)
-    val key = "spark.sql.streaming.multipleWatermarkPolicy"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "max")
-    val drained =
-      try graft.streaming.Streams.runToMemory(s, joined, "q286_sink",
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    drained
+    outerDrain(s, graft.streaming.Streams.viewPurchaseJoin(s, d, "rightOuter"),
+        "q286_sink")
       .select($"view_id", $"purchase_id",
         expr("(p_ns - v_ns) div 1000000000").as("delta_s"))
       .orderBy($"purchase_id", $"view_id")
@@ -1311,7 +1300,7 @@ object Events {
   // --- q172: stream-stream FULL OUTER interval join ------------------------
   // Completes the streaming join matrix q58 (inner) and q157 (left outer)
   // built: both unmatched views AND unmatched purchases null-complete.
-  // The watermark geometry (Streams.viewPurchaseFullOuterJoin) forces an
+  // The watermark geometry (Streams.viewPurchaseJoin) forces an
   // asymmetric shape — the purchase side stays unbounded to anchor the
   // global watermark near max, which leaves the last 2 h of purchases
   // unresolved in state — so the drained result is restricted to the
@@ -1324,18 +1313,8 @@ object Events {
     // one driver-side max(ts) shared by the operator's cutoff and the
     // resolution filter below (it used to run twice per invocation)
     val maxNs = Tables.events(s, d).agg(max($"ts")).head.getLong(0)
-    val joined = graft.streaming.Streams.viewPurchaseFullOuterJoin(s, d,
-      maxNsHint = Some(maxNs))
-    val key = "spark.sql.streaming.multipleWatermarkPolicy"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "max")
-    val drained =
-      try graft.streaming.Streams.runToMemory(s, joined, "q172_sink",
-        org.apache.spark.sql.streaming.OutputMode.Append())
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+    val drained = outerDrain(s, graft.streaming.Streams.viewPurchaseJoin(s, d,
+      "fullOuter", maxNsHint = Some(maxNs)), "q172_sink")
     val cutoffNs = maxNs - 4L * 3600 * 1000000000L
     drained
       .filter($"view_id".isNotNull || $"p_ns" <= cutoffNs)
@@ -1372,7 +1351,7 @@ object Events {
   // the check shape-rich (count + id extremes).
   def q177(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val joined = graft.streaming.Streams.viewPurchaseSemiJoin(s, d)
+    val joined = graft.streaming.Streams.viewPurchaseJoin(s, d, "leftSemi")
     // Semi emission is match-driven (a view emits on its first match, in
     // that match's data batch); the no-data batch can only EVICT unmatched
     // views, never emit — skip it (the q58 inner-join rule; the

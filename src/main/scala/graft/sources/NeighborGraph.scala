@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.functions.VectorFunctions._
-import graft.operators.Similarity
+import graft.operators.{Fixpoint, Similarity}
 
 /** Graph-structured ANN: a staged k-NN neighbor graph (the NSW/HNSW
   * family's base layer) + deterministic greedy beam search over it — the
@@ -597,7 +598,7 @@ object NeighborGraph {
     // cardinality. Interpreted eval is exact (DotProductExpr.nullSafeEval
     // is the same double arithmetic), so results are unchanged.
     val entries = entryNodes(spark, path, nEntries)
-    inSearchConfScope(spark) {
+    GraftSession.withConfs(spark, searchConfs) {
       beamSearchPhases(spark, queries, corpus, k,
         Seq(SearchPhase(s"$path/edges", beamWidth, rounds, nBuckets)), entries)
     }
@@ -636,7 +637,7 @@ object NeighborGraph {
       k: Int, beamWidth: Int, rounds: Int, nBuckets: Int,
       nEntries: Int = 1): DataFrame = {
     val entries = entryNodes(spark, path, nEntries)
-    inSearchConfScope(spark) {
+    GraftSession.withConfs(spark, searchConfs) {
       beamSearchPhases(spark, queries, corpus, k,
         Seq(SearchPhase(s"$path/edges", beamWidth, rounds, nBuckets)),
         entries, arms = Some(arms))
@@ -691,7 +692,7 @@ object NeighborGraph {
       corpus: DataFrame, k: Int, l1Beam: Int, l1Rounds: Int, beamWidth: Int,
       rounds: Int, nBuckets: Int, nEntries: Int): DataFrame = {
     val entries = entryNodes(spark, s"$path/l1", nEntries)
-    inSearchConfScope(spark) {
+    GraftSession.withConfs(spark, searchConfs) {
       beamSearchPhases(spark, queries, corpus, k,
         Seq(SearchPhase(s"$path/l1/edges", l1Beam, l1Rounds, nBuckets),
           SearchPhase(s"$path/edges", beamWidth, rounds, nBuckets)), entries)
@@ -706,12 +707,12 @@ object NeighborGraph {
     * DataFrame: per round one window top-`beamWidth` per query (the
     * beam), one src-keyed shuffle join against the staged edges (which
     * carry their dst vectors — no corpus join), an anti-join against the
-    * visited set, and scoring inside the same plan; the visited relation
-    * is eagerly localCheckpointed per round (the [[graft.operators.Graph]]
-    * frontier-algorithm lineage rule) and the loop exits at the score
-    * fixpoint. Identical arithmetic, tie-breaks, and round structure to
-    * the driver form — q357 hash-gates the equivalence on the shared
-    * oracle; ScaleStress runs the batch sizes the driver map cannot. */
+    * visited set, and scoring inside the same plan; the rounds run through
+    * [[graft.operators.Fixpoint.untilStable]] (visited checkpointed per
+    * round) and the loop exits at the score fixpoint. Identical
+    * arithmetic, tie-breaks, and round structure to the driver form —
+    * q357 hash-gates the equivalence on the shared oracle; ScaleStress
+    * runs the batch sizes the driver map cannot. */
   def beamSearchBulk(spark: SparkSession, path: String, queries: DataFrame,
       corpus: DataFrame, k: Int, beamWidth: Int, rounds: Int,
       nBuckets: Int, nEntries: Int = 1,
@@ -728,18 +729,16 @@ object NeighborGraph {
         l2Norm(col("embedding")).as("n_nrm"))
     def simCol(e: Column, n: Column): Column =
       round(dotProduct(col("q_emb"), e) / (col("q_nrm") * n), 6)
-    var visited = q.crossJoin(broadcast(entVecs))
+    val init = q.crossJoin(broadcast(entVecs))
       .select(col("query_id"), col("node"),
         simCol(col("n_emb"), col("n_nrm")).as("sim"))
-      .localCheckpoint(true)
-    // row counts read straight off the checkpointed RDD: one shuffle-free
-    // job over cached blocks (Dataset.count would plan an AQE exchange —
-    // two scheduled jobs per round for a metadata-sized answer)
-    def ckCount(df: DataFrame): Long = df.queryExecution.toRdd.count()
-    var nVisited = ckCount(visited)
-    var r = 0
-    var fixpoint = false
-    while (r < rounds && !fixpoint) {
+    // ONE materializing action per round (Fixpoint.untilStable): the
+    // round's heavy work (beam window + edge join + anti-join + scoring)
+    // runs inside the union's checkpoint, and the fresh rows — anti-joined
+    // against visited, so every one is new — are the round's changed rows,
+    // counted in the same job. An empty round leaves the beam, hence every
+    // later round, unchanged: the early exit cannot change the result.
+    val walked = Fixpoint.untilStable(init, rounds) { (visited, _) =>
       val beam = visited
         .withColumn("rk", row_number().over(Window.partitionBy("query_id")
           .orderBy(col("sim").desc, col("node").asc)))
@@ -755,26 +754,15 @@ object NeighborGraph {
         .join(q, "query_id")
         .select(col("query_id"), col("dst").as("node"),
           simCol(col("dst_emb"), col("dst_nrm")).as("sim"))
-      // ONE materializing action per round: the round's heavy work (beam
-      // window + edge join + anti-join + scoring) runs inside the union's
-      // checkpoint, and the fixpoint reads off the cached count — fresh is
-      // anti-joined against visited, so every fresh row is new and an
-      // unchanged count means an empty round. An empty round leaves the
-      // beam — hence every later round — unchanged: the early exit cannot
-      // change the result. (The old fresh-then-union form paid a separate
-      // checkpoint + isEmpty action for the same information.)
-      val next = visited.unionByName(fresh).localCheckpoint(true)
-      val nNext = ckCount(next)
-      fixpoint = nNext == nVisited
-      if (!fixpoint) { visited = next; nVisited = nNext }
-      r += 1
-    }
+      visited.withColumn(Fixpoint.Changed, lit(false))
+        .unionByName(fresh.withColumn(Fixpoint.Changed, lit(true)))
+    }.result
     // filtered answer (the beamSearchWhere contract, DataFrame form):
     // the walk stayed unfiltered; the top-k ranks only allowed members
     val admissible = allowed match {
-      case Some(a) => visited.join(a.select(col("vec_id").as("node")),
+      case Some(a) => walked.join(a.select(col("vec_id").as("node")),
         Seq("node"), "left_semi")
-      case None => visited
+      case None => walked
     }
     admissible
       .filter(col("query_id") =!= col("node"))
@@ -785,17 +773,9 @@ object NeighborGraph {
         col("rank"), col("sim"))
   }
 
-  private def inSearchConfScope[T](spark: SparkSession)(body: => T): T = {
-    val confKeys = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.adaptive.enabled" -> "false")
-    val prev = confKeys.map { case (key, _) => key -> spark.conf.getOption(key) }
-    confKeys.foreach { case (key, v) => spark.conf.set(key, v) }
-    try body
-    finally prev.foreach {
-      case (key, Some(v)) => spark.conf.set(key, v)
-      case (key, None) => spark.conf.unset(key)
-    }
-  }
+  /** The serving-loop conf scope [[beamSearch]] explains. */
+  private val searchConfs = Seq("spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.adaptive.enabled" -> "false")
 
   /** Parameter-sweep serving: the SAME staged layout walked at several
     * (beamWidth, rounds) settings in one serving session with a SHARED
@@ -810,7 +790,7 @@ object NeighborGraph {
       corpus: DataFrame, k: Int, settings: Seq[(Int, Int)], nBuckets: Int,
       nEntries: Int = 1): Seq[DataFrame] = {
     val entries = entryNodes(spark, path, nEntries)
-    inSearchConfScope(spark) {
+    GraftSession.withConfs(spark, searchConfs) {
       beamSearchWalks(spark, queries, corpus, k,
         settings.map { case (bw, ro) =>
           Seq(SearchPhase(s"$path/edges", bw, ro, nBuckets)) },

@@ -5,6 +5,7 @@ import java.util.Properties
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
+import graft.GraftSession
 import graft.etl.Upsert
 
 /** Source/sink surface (SURVEY.md §2 Tier B "Scans/sources" row): parquet,
@@ -133,20 +134,14 @@ object Sources {
       targetRows: Long = 1000000L, approxRowBytes: Int = 100): Unit = {
     // AQE sizes the rebalanced partitions by the advisory byte target, so
     // aim it at targetRows * approxRowBytes for the duration of the write.
-    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, (targetRows * approxRowBytes).toString)
-    try {
+    GraftSession.withConfs(spark, Seq(
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+          (targetRows * approxRowBytes).toString)) {
       spark.read.parquet(inPath)
         .hint("rebalance")
         .write.mode(SaveMode.Overwrite)
         .option("maxRecordsPerFile", targetRows.toString)
         .parquet(outPath)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 }

@@ -10,6 +10,8 @@ import org.apache.spark.sql.{Encoders => SEncoders}
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, StreamingQueryProgress, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 import org.apache.spark.sql.types.StructType
 
+import graft.GraftSession
+
 /** Structured Streaming surface — the unbounded-time-series form of the
   * reference's hourly poll (SURVEY.md §1.1: the "stream" is a cron-batched
   * hourly extract; logically it is an event-time stream, so the engine
@@ -136,15 +138,14 @@ object Streams {
     *   `FileSystem.rename` is not atomic, so other schemes keep the
     *   default manager.
     *
-    * CONSTRAINT: the conf swap is session-global for the drain's duration —
-    * a query planned concurrently in the SAME session would silently pick
-    * up the swapped confs. The bench/spec/Verify harnesses are strictly
-    * sequential; for concurrent use, pass a cloned session
-    * (`spark.newSession()`) so the mutation is scoped to the clone. */
+    * CONSTRAINT: the confs are swapped through [[GraftSession.withConfs]],
+    * session-global for the drain's duration. The bench/spec/Verify
+    * harnesses are strictly sequential; concurrent callers pass a cloned
+    * session. */
   private def drain(spark: SparkSession, df: DataFrame,
       checkpointDir: Option[String], confs: Seq[(String, String)] = Nil)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery =
-    withConfs(spark, confs ++ drainConfs(spark, checkpointDir)) {
+    GraftSession.withConfs(spark, confs ++ drainConfs(spark, checkpointDir)) {
       val w = sink(df.writeStream.trigger(Trigger.AvailableNow()))
       val q = checkpointDir.fold(w)(w.option("checkpointLocation", _)).start()
       q.awaitTermination()
@@ -166,19 +167,6 @@ object Streams {
     if (scheme != "file") isolation
     else isolation :+ ("spark.sql.streaming.checkpointFileManagerClass" ->
       classOf[FileSystemBasedCheckpointFileManager].getName)
-  }
-
-  /** Run `body` with `confs` set on the session; each key's previous value
-    * is restored (or the key unset) afterwards. */
-  private def withConfs[T](spark: SparkSession, confs: Seq[(String, String)])(
-      body: => T): T = {
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 
   /** Chained stateful aggregations in ONE streaming query — Spark's
@@ -374,196 +362,100 @@ object Streams {
       }
   }
 
-  /** Stream-stream interval join: views matched to the same user's
-    * purchases within the hour after the view. Both sides are independent
-    * streaming sources with their own event-time watermark; the join
-    * condition carries ONLY the event-time range on the watermarked
-    * timestamp columns — that is what lets Spark bound the join state (each
-    * side's buffered rows drop once the other side's watermark passes the
-    * range), and it is also all the watermark-propagation simulator can
-    * analyze: a raw long conjunct (p_ns - v_ns) inside the join condition
-    * makes multi-batch runs fail with "Cannot evaluate expression" when the
-    * simulator computes eviction thresholds. The exact nanosecond bound —
-    * needed because the parquet ts is TIMESTAMP(NANOS) and the
-    * micros-truncated event-time column alone would mis-classify pairs
-    * within 1 us of the boundary — is applied as a stateless filter AFTER
-    * the join, equivalent for an inner join since floor is monotone and
-    * 1 hour is a whole number of micros (the ns range implies the us
-    * range). At scale this is the canonical enrichment-join shape: state ∝
-    * one hour of per-user traffic, not the stream. */
-  def viewPurchaseIntervalJoin(spark: SparkSession, dir: String,
-      glob: String = "events.parquet",
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val views = eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      .filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-        col("ts").as("v_ns"), col("ts_us").as("v_ts"))
-      .withWatermark("v_ts", "2 hours")
-    val purchases = eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ns"), col("ts_us").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    views.join(purchases,
-      expr("""v_user = p_user
-              AND p_ts >= v_ts AND p_ts <= v_ts + interval 1 hour"""))
-      .filter(expr("p_ns - v_ns BETWEEN 0 AND 3600000000000"))
-  }
-
-  /** Stream-stream LEFT OUTER interval join — the remaining streaming
-    * join semantics after the inner form ([[viewPurchaseIntervalJoin]]):
-    * views with NO purchase in their 1-hour window must still emit, as
-    * null-extended rows. Outer emission is watermark-driven — a view's
-    * null row appears only when state eviction PROVES no match can
-    * arrive (watermark past v_ts + 1h) — so a static-backlog drain
-    * leaves views near the stream's end unresolved in state forever.
-    * The operator therefore bounds its left side at max_ts − 4 hours
-    * (join range 1 h + watermark 2 h + 1 h slack): every retained view
-    * is provably resolvable by the post-backlog no-data batch. The
-    * cutoff lookup is a driver-side one-row aggregate over the batch
-    * table (the Upsert partition-pruning convention: bounded,
-    * load-bearing). Join semantics are µs-exact (the physical parquet
-    * is timestamp[us]; the ns residual that q58 filters is identically
-    * zero here, and an outer join cannot re-classify a pair post-join
-    * the way q58's stateless residual filter can). */
-  def viewPurchaseLeftOuterJoin(spark: SparkSession, dir: String,
-      glob: String = "events.parquet",
-      maxFilesPerTrigger: Option[Int] = None,
-      maxNsHint: Option[Long] = None): DataFrame = {
-    // callers that already ran the one-row max(ts) aggregate (q172 needs
-    // it again for its resolution filter) pass it in instead of paying
-    // the scan twice
-    val maxNs = maxNsHint.getOrElse(graft.Tables.events(spark, dir)
-      .agg(org.apache.spark.sql.functions.max(col("ts"))).head.getLong(0))
-    val cutoffNs = maxNs - 4L * 3600 * 1000000000L
-    // Each side's watermark node observes only ITS side's rows (writing
-    // the filter after withWatermark does not help — Catalyst pushes
-    // non-watermark-column predicates back below the node), and Spark's
-    // GLOBAL watermark is the MIN across nodes. The view side's max
-    // event time is cutoff-bounded, so under the default min policy the
-    // global watermark stalls 2 h behind the LAST RETAINED VIEW, whose
-    // own state then never evicts and whose null row never emits
-    // (observed live: exactly one row missing at sf0.001). The caller
-    // must run the drain under multipleWatermarkPolicy=max ([[q157]]
-    // does, with restore): keyed to the freshest side, the final
-    // watermark is max_ts − 2 h and every retained view (≤ max_ts − 4 h)
-    // resolves with an hour of slack — no eviction-boundary sensitivity.
-    val views = eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      .filter(col("event_type") === "view" && col("ts") <= cutoffNs)
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-        col("ts").as("v_ns"), col("ts_us").as("v_ts"))
-      .withWatermark("v_ts", "2 hours")
-    val purchases = eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ns"), col("ts_us").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    views.join(purchases,
-      expr("""v_user = p_user
-              AND p_ts >= v_ts AND p_ts <= v_ts + interval 1 hour"""),
-      "leftOuter")
-  }
-
-  /** Stream-stream RIGHT OUTER interval join — [[viewPurchaseLeftOuterJoin]]
-    * mirrored: unmatched PURCHASES emit null-extended rows ("which
-    * purchases were organic — no view in the preceding hour"). The
-    * cutoff/watermark arithmetic mirrors too: the OUTER side (purchases)
-    * is bounded at max−4h so every retained purchase provably resolves,
-    * and views stay unbounded to anchor the global watermark near max —
-    * run under multipleWatermarkPolicy=max exactly as q157. Matched
-    * pairs are unaffected by the cutoff (a matching view precedes its
-    * purchase, so it is ≤ the purchase's own bounded timestamp). */
-  def viewPurchaseRightOuterJoin(spark: SparkSession, dir: String,
-      glob: String = "events.parquet",
-      maxFilesPerTrigger: Option[Int] = None,
-      maxNsHint: Option[Long] = None): DataFrame = {
-    val maxNs = maxNsHint.getOrElse(graft.Tables.events(spark, dir)
-      .agg(org.apache.spark.sql.functions.max(col("ts"))).head.getLong(0))
-    val cutoffNs = maxNs - 4L * 3600 * 1000000000L
-    val views = eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      .filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-        col("ts").as("v_ns"), col("ts_us").as("v_ts"))
-      .withWatermark("v_ts", "2 hours")
-    val purchases = eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      .filter(col("event_type") === "purchase" && col("ts") <= cutoffNs)
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ns"), col("ts_us").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    views.join(purchases,
-      expr("""v_user = p_user
-              AND p_ts >= v_ts AND p_ts <= v_ts + interval 1 hour"""),
-      "rightOuter")
-  }
-
-  /** Stream-stream FULL OUTER interval join — completes the streaming
-    * join matrix (inner [[viewPurchaseIntervalJoin]], left outer
-    * [[viewPurchaseLeftOuterJoin]]): unmatched VIEWS and unmatched
-    * PURCHASES both emit null-extended rows once eviction proves no
-    * partner can arrive.
+  /** Stream-stream interval join of views to the same user's purchases
+    * within the hour after the view, for `joinType` ∈ {inner, leftOuter,
+    * rightOuter, fullOuter, leftSemi} — the streaming join matrix (q58
+    * inner, q157 left outer, q286 right outer, q172 full outer, q177 left
+    * semi). Both sides are independent streaming sources with their own
+    * event-time watermark; the join condition carries ONLY the event-time
+    * range on the watermarked timestamp columns — that is what lets Spark
+    * bound the join state (each side's buffered rows drop once the other
+    * side's watermark passes the range), and it is also all the
+    * watermark-propagation simulator can analyze: a raw long conjunct
+    * (p_ns - v_ns) inside the join condition makes multi-batch runs fail
+    * with "Cannot evaluate expression" when the simulator computes
+    * eviction thresholds. At scale this is the canonical enrichment-join
+    * shape: state ∝ one hour of per-user traffic, not the stream.
     *
-    * The two outer sides cannot BOTH be cutoff-bounded: the global
-    * watermark derives from the sides' own max event times, so bounding
-    * both stalls it below what either side's null rows need — the
-    * left-outer trick (bound one side, let the other anchor the
-    * watermark near max) is the only self-consistent shape. Views are
-    * bounded at max−4h exactly as in the left-outer form (all resolve:
-    * final watermark max−2h > v_ts+1h+slack); purchases stay UNBOUNDED
-    * so the watermark stays fresh, which leaves purchases in the last
-    * 2 h unresolved in state — the CALLER must restrict the drained
-    * null-purchase rows to p_ts ≤ max−4h (q172 does, and its oracle
-    * states the identical restriction). That region is provably
-    * resolved: watermark max−2h ≥ p_ts+2h ≥ the p_ts window end + slack.
-    * Run under multipleWatermarkPolicy=max (the q157 rule). */
-  def viewPurchaseFullOuterJoin(spark: SparkSession, dir: String,
+    * `inner` alone keeps the exact nanosecond bound, as a stateless filter
+    * AFTER the join: the micros-truncated event-time column alone would
+    * mis-classify pairs within 1 us of the boundary, and the filter is
+    * equivalent for an inner join since floor is monotone and 1 hour is a
+    * whole number of micros (the ns range implies the us range). The other
+    * forms are µs-exact: the physical parquet is timestamp[us], so the ns
+    * residual is identically zero, and an outer join cannot re-classify a
+    * pair post-join the way a stateless residual filter can.
+    *
+    * Outer emission is watermark-driven — an unmatched row's null-extended
+    * row appears only when state eviction PROVES no match can arrive
+    * (watermark past the window end) — so a static-backlog drain would
+    * leave rows near the stream's end unresolved in state forever. The
+    * outer side is therefore bounded at max_ts − 4 h (join range 1 h +
+    * watermark 2 h + 1 h slack): `leftOuter` and `fullOuter` bound the
+    * views, `rightOuter` the purchases; every retained row is provably
+    * resolvable by the post-backlog no-data batch. The max lookup is a
+    * driver-side one-row aggregate over the batch table (the Upsert
+    * partition-pruning convention: bounded, load-bearing); a caller that
+    * already ran it passes `maxNsHint` (q172 needs it again for its
+    * resolution filter). Matched pairs are unaffected by a purchase
+    * cutoff: a matching view precedes its purchase, so it is ≤ the
+    * purchase's own bounded timestamp.
+    *
+    * Each side's watermark node observes only ITS side's rows (writing the
+    * filter after withWatermark does not help — Catalyst pushes
+    * non-watermark-column predicates back below the node), and Spark's
+    * GLOBAL watermark is the MIN across nodes. The bounded side's max event
+    * time is cutoff-bounded, so under the default min policy the global
+    * watermark stalls 2 h behind the LAST RETAINED row, whose own state
+    * then never evicts and whose null row never emits (observed live:
+    * exactly one row missing at sf0.001). The outer drains must therefore
+    * run under multipleWatermarkPolicy=max (q157, q286 and q172 do, with
+    * restore): keyed to the freshest side, the final watermark is
+    * max_ts − 2 h and every retained row (≤ max_ts − 4 h) resolves with an
+    * hour of slack — no eviction-boundary sensitivity. The two outer sides
+    * cannot BOTH be bounded: the global watermark derives from the sides'
+    * own max event times, so bounding both stalls it below what either
+    * side's null rows need. `fullOuter` therefore bounds only the views and
+    * leaves purchases unbounded to keep the watermark fresh, which leaves
+    * purchases in the last 2 h unresolved in state — the CALLER must
+    * restrict the drained null-purchase rows to p_ts ≤ max−4h (q172 does,
+    * and its oracle states the identical restriction). That region is
+    * provably resolved: watermark max−2h ≥ p_ts+2h ≥ the p_ts window end +
+    * slack.
+    *
+    * `leftSemi` emits each view AT MOST ONCE iff some purchase lands in
+    * its window. Semi emission is match-driven (a view emits on its FIRST
+    * match and drops from state), so like `inner` it needs no resolution
+    * cutoff: every possible match is in the backlog, and non-matching
+    * views simply evict silently. State ∝ one window of unmatched views +
+    * buffered purchases — strictly smaller than the inner join's (matched
+    * views leave state early). */
+  def viewPurchaseJoin(spark: SparkSession, dir: String, joinType: String,
       glob: String = "events.parquet",
       maxFilesPerTrigger: Option[Int] = None,
       maxNsHint: Option[Long] = None): DataFrame = {
-    val maxNs = maxNsHint.getOrElse(graft.Tables.events(spark, dir)
-      .agg(org.apache.spark.sql.functions.max(col("ts"))).head.getLong(0))
-    val cutoffNs = maxNs - 4L * 3600 * 1000000000L
-    val views = eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      .filter(col("event_type") === "view" && col("ts") <= cutoffNs)
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-        col("ts").as("v_ns"), col("ts_us").as("v_ts"))
-      .withWatermark("v_ts", "2 hours")
-    val purchases = eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ns"), col("ts_us").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    views.join(purchases,
-      expr("""v_user = p_user
-              AND p_ts >= v_ts AND p_ts <= v_ts + interval 1 hour"""),
-      "fullOuter")
-  }
-
-  /** Stream-stream LEFT SEMI interval join — the last member of the
-    * streaming join matrix (inner q58, left outer q157, full outer q172):
-    * emit each view AT MOST ONCE iff some purchase lands in its 1-hour
-    * window. Semi emission is match-driven (a view emits on its FIRST
-    * match and drops from state), so unlike the outer forms no side needs
-    * a resolution cutoff: every possible match is in the backlog, and
-    * non-matching views simply evict silently. State ∝ one window of
-    * unmatched views + buffered purchases — strictly smaller than the
-    * inner join's (matched views leave state early). */
-  def viewPurchaseSemiJoin(spark: SparkSession, dir: String,
-      glob: String = "events.parquet",
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val views = eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      .filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
-        col("ts").as("v_ns"), col("ts_us").as("v_ts"))
-      .withWatermark("v_ts", "2 hours")
-    val purchases = eventsStream(spark, dir, glob, maxFilesPerTrigger)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-        col("ts").as("p_ns"), col("ts_us").as("p_ts"))
-      .withWatermark("p_ts", "2 hours")
-    views.join(purchases,
-      expr("""v_user = p_user
-              AND p_ts >= v_ts AND p_ts <= v_ts + interval 1 hour"""),
-      "leftSemi")
+    require(Set("inner", "leftOuter", "rightOuter", "fullOuter", "leftSemi")(joinType),
+      s"unsupported view-purchase join type: $joinType")
+    val boundViews = joinType == "leftOuter" || joinType == "fullOuter"
+    val boundPurchases = joinType == "rightOuter"
+    lazy val cutoffNs = maxNsHint.getOrElse(graft.Tables.events(spark, dir)
+      .agg(max(col("ts"))).head.getLong(0)) - 4L * 3600 * 1000000000L
+    def side(eventType: String, id: String, p: String, bounded: Boolean) = {
+      val rows = eventsStream(spark, dir, glob, maxFilesPerTrigger)
+        .filter(col("event_type") === eventType)
+      (if (bounded) rows.filter(col("ts") <= cutoffNs) else rows)
+        .select(col("event_id").as(id), col("user_id").as(s"${p}_user"),
+          col("ts").as(s"${p}_ns"), col("ts_us").as(s"${p}_ts"))
+        .withWatermark(s"${p}_ts", "2 hours")
+    }
+    val joined = side("view", "view_id", "v", boundViews)
+      .join(side("purchase", "purchase_id", "p", boundPurchases),
+        expr("""v_user = p_user
+                AND p_ts >= v_ts AND p_ts <= v_ts + interval 1 hour"""),
+        joinType)
+    if (joinType == "inner")
+      joined.filter(expr("p_ns - v_ns BETWEEN 0 AND 3600000000000"))
+    else joined
   }
 
   /** Default drain state-partition count: 2, the round-13 audit's floor
@@ -633,7 +525,7 @@ object Streams {
     runToMemory(spark, ds.toDF(), name, mode, statePartitions)
 
   /** Stream-static enrichment join — the remaining streaming join shape
-    * after the stream-stream interval join ([[viewPurchaseIntervalJoin]]):
+    * after the stream-stream interval join ([[viewPurchaseJoin]]):
     * each micro-batch of the event stream is joined against a STATIC
     * dimension table. Stateless (no watermark, no join state — the static
     * side is complete by definition), and the dimension is broadcast, so
@@ -833,7 +725,7 @@ object Streams {
     * floor-audit lever for the state-store query family. Both confs are
     * restored afterwards so the session's other streams are untouched. */
   private def withRocksDb[T](spark: SparkSession)(body: => T): T =
-    withConfs(spark, Seq(
+    GraftSession.withConfs(spark, Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->

@@ -174,7 +174,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // at round 4 (the first empty frontier) and report converged
     val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L))
     val edges = (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
-    val full = operators.Graph.bfsHopsWithStatus(
+    val full = operators.Graph.bfsHops(
       edges, Seq(0L).toDF("node"), maxHops = 10)
     assert(full.converged, "closure within budget must report converged")
     assert(full.roundsRun == 4, s"expected early exit at round 4, " +
@@ -182,7 +182,7 @@ class AnalyticsSpec extends AnyFunSuite {
     val hops = full.result.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(hops == Map(0L -> 0, 1L -> 1, 2L -> 2, 3L -> 3))
     // a budget that cuts the walk short must say so
-    val cut = operators.Graph.bfsHopsWithStatus(
+    val cut = operators.Graph.bfsHops(
       edges, Seq(0L).toDF("node"), maxHops = 2)
     assert(!cut.converged, "non-empty last frontier must report unconverged")
     assert(cut.roundsRun == 2)
@@ -194,7 +194,7 @@ class AnalyticsSpec extends AnyFunSuite {
       .toDF("src", "dst", "w")
     // distances stabilize after round 3; a budget of 10 must detect the
     // round-4 no-change and stop
-    val full = operators.Graph.ssspWithStatus(
+    val full = operators.Graph.sssp(
       edges, Seq(1L).toDF("node"), rounds = 10)
     assert(full.converged)
     assert(full.roundsRun == 4, s"expected fixpoint at round 4, " +
@@ -202,9 +202,51 @@ class AnalyticsSpec extends AnyFunSuite {
     val d = full.result.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(d == Map(1L -> 0L, 2L -> 2L, 3L -> 1L, 4L -> 3L))
     // a 2-round budget leaves node 4 on the expensive path → unconverged
-    val cut = operators.Graph.ssspWithStatus(
+    val cut = operators.Graph.sssp(
       edges, Seq(1L).toDF("node"), rounds = 2)
     assert(!cut.converged)
+  }
+
+  test("BFS and SSSP rounds read the src-partitioned edge cache without re-shuffling it") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import org.apache.spark.sql.functions._
+    object Plans extends AdaptiveSparkPlanHelper
+    def cacheScan(p: SparkPlan): Boolean = p match {
+      case _: InMemoryTableScanExec => true
+      case s: QueryStageExec => cacheScan(s.plan)
+      case _ => false
+    }
+    // a 200-node ring with chords: every round's frontier join has rows
+    val edges = spark.range(200).select(col("id").as("src"),
+        ((col("id") + 1) % 200).as("dst"), lit(1L).as("w"))
+      .unionByName(spark.range(200).select(col("id").as("src"),
+        ((col("id") * 7) % 200).as("dst"), lit(3L).as("w")))
+    val seeds = spark.range(1).select(col("id").as("node"))
+    // no broadcast: every frontier join must be a shuffle join, or the
+    // cache's layout would never be asked for
+    val plans = GraftSession.withConfs(spark,
+        Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+      org.apache.spark.ExecutedPlans(spark) {
+        operators.Graph.bfsHops(edges, seeds, maxHops = 4).result.collect()
+        operators.Graph.sssp(edges, seeds, rounds = 4).result.collect()
+      }._2
+    }
+    val cacheJoins = plans.flatMap(Plans.collect(_) {
+      case j: SortMergeJoinExec if j.children.exists(c => Plans.find(c)(cacheScan).isDefined) => j
+    })
+    assert(cacheJoins.size >= 8, s"expected a cache-side join per round, got ${cacheJoins.size}")
+    val reshuffled = plans.flatMap(Plans.collect(_) {
+      case x: ShuffleExchangeExec if cacheScan(x.child) && (x.outputPartitioning match {
+          case h: HashPartitioning => h.references.exists(_.name == "src")
+          case _ => false
+        }) => x
+    })
+    assert(reshuffled.isEmpty, s"edge cache re-shuffled on src:\n${reshuffled.mkString("\n")}")
   }
 
   test("k-core peeling matches hand peeling and reports convergence") {
@@ -256,6 +298,18 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(jobs <= 2, s"q170 ran $jobs jobs")
   }
 
+  // the graph fixpoints' budgets: q145, q148 and q357 read convergence
+  // off each round's checkpoint; the fixed-round loops hold their counts
+  Seq("q143_pagerank" -> 19, "q145_graph_bfs" -> 18, "q148_weighted_sssp" -> 14,
+      "q167_pagerank_dangling" -> 19, "q196_label_propagation" -> 13,
+      "q199_personalized_pagerank" -> 15, "q200_hits" -> 24,
+      "q357_nng_bulk_knn" -> 50).foreach { case (q, budget) =>
+    test(s"$q runs at most $budget Spark jobs at sf0.001") {
+      val jobs = warmJobs(q)
+      assert(jobs <= budget, s"$q ran $jobs jobs")
+    }
+  }
+
   test("q174 plans its rank cut as WindowGroupLimit above the bounded slice") {
     // the pre-limit cut must plan as WindowGroupLimit (each map task keeps
     // only its top-100 per priority before the shuffle) — the q132 rule;
@@ -290,7 +344,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // path positions; 5 is beyond maxHops=3; 8/9 unreachable
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (8L, 9L))
     val edges = (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
-    val got = operators.Graph.bfsHops(edges, Seq(1L).toDF("node"), maxHops = 3)
+    val got = operators.Graph.bfsHops(edges, Seq(1L).toDF("node"), maxHops = 3).result
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got == Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3), s"got $got")
   }
@@ -330,11 +384,11 @@ class AnalyticsSpec extends AnyFunSuite {
     // rounds=2 must NOT reach it through the detour path's full length
     val edges = Seq((1L, 2L, 10L), (1L, 3L, 1L), (3L, 2L, 1L), (2L, 4L, 1L))
       .toDF("src", "dst", "w")
-    val r2 = operators.Graph.sssp(edges, Seq(1L).toDF("node"), rounds = 2)
+    val r2 = operators.Graph.sssp(edges, Seq(1L).toDF("node"), rounds = 2).result
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r2 == Map(1L -> 0L, 2L -> 2L, 3L -> 1L, 4L -> 11L), s"got $r2")
     // one more round relaxes 4 through the detour: 1→3→2→4 = 3
-    val r3 = operators.Graph.sssp(edges, Seq(1L).toDF("node"), rounds = 3)
+    val r3 = operators.Graph.sssp(edges, Seq(1L).toDF("node"), rounds = 3).result
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r3(4L) == 3L, s"round-3 distance to 4 was ${r3(4L)}")
   }

@@ -255,7 +255,7 @@ object ScaleStress {
       System.gc()
       import spark.implicits._
       val (bn, bsec) = time(
-        Graph.bfsHops(edges, Seq(0L).toDF("node"), maxHops = 3).count())
+        Graph.bfsHops(edges, Seq(0L).toDF("node"), maxHops = 3).result.count())
       println(f"[scale] R=$r%-2d p=$partitions%-3s bfs_h3         rows=$bn%-8d sec=$bsec%.2f")
       // k-core on the degree-6 circulant: every node has degree 6, so
       // peeling at k=7 deletes EVERYTHING in one round and k=6 deletes

@@ -54,12 +54,11 @@ class StreamingSpec extends AnyFunSuite {
     assert(finalCounts == expected)
   }
 
+  private val rocksDb = Seq("spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+
   test("transformWithState (StatefulProcessor + RocksDB) matches mapGroupsWithState") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    GraftSession.withConfs(spark, rocksDb) {
       val updates = Streams.runDatasetToMemory(spark,
         Streams.userRunningCountsTws(spark, Streams.eventsStream(spark, sf)),
         "user_tws_stream", OutputMode.Update())
@@ -69,11 +68,6 @@ class StreamingSpec extends AnyFunSuite {
       val expected = Tables.events(spark, sf).groupBy(col("user_id")).count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(finalCounts == expected)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -153,12 +147,8 @@ class StreamingSpec extends AnyFunSuite {
       Files.copy(Paths.get(part), Paths.get(f"$dir/events_$i%02d.parquet"),
         StandardCopyOption.REPLACE_EXISTING)
     }
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val joined = Streams.viewPurchaseIntervalJoin(spark, dir,
+    GraftSession.withConfs(spark, rocksDb) {
+      val joined = Streams.viewPurchaseJoin(spark, dir, "inner",
         glob = "events_*.parquet", maxFilesPerTrigger = Some(1))
       spark.catalog.dropTempView("rocks_interval")
       val q = joined.writeStream.outputMode(OutputMode.Append())
@@ -189,11 +179,6 @@ class StreamingSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(streamed == batch,
         s"multi-batch RocksDB join diverged: ${(streamed diff batch).take(3)} vs ${(batch diff streamed).take(3)}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
