@@ -23,6 +23,12 @@ incorrect output counts as a failed run: its pair is not won, and its
 figures enter no median. Then each side's failed/attempted ops and
 incorrect runs. Exits 1 when a run fails or reports incorrect output.
 
+When the runs' context lines carry per-statement-kind latencies
+(`phases_s.p50_latency.<kind>`, as `bi_dashboard` runs do), it then prints,
+for each kind, each side's median of the runs' p50 latencies, the change's
+median delta and the pairs the change won, so a change shows which kinds
+of statement moved.
+
 Each run's line also carries the VM's CPU steal during the run (the
 `cpu_share.steal` of its context line), and a pair where either side ran
 at more than 5% steal is marked, in its own line and in the summary: its
@@ -40,6 +46,7 @@ import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 STEAL_MARK = 0.05
+KIND_PREFIX = "p50_latency."
 
 
 def export(rev, dest):
@@ -67,6 +74,12 @@ def run_one(tree, workload, seed, seconds, trace):
 def steal(run):
     """The CPU steal share during a run, or None when it was not measured."""
     return ((run or {}).get("context", {}).get("cpu_share") or {}).get("steal")
+
+
+def kind_latencies(run):
+    """A run's p50 latency per statement kind, from its context line."""
+    phases = (run or {}).get("context", {}).get("phases_s") or {}
+    return {k[len(KIND_PREFIX):]: v for k, v in phases.items() if k.startswith(KIND_PREFIX)}
 
 
 def quartiles(xs):
@@ -150,6 +163,20 @@ def main():
         print(f"{name:10} {bq[1]:9.3f} [{bq[0]:.3f}-{bq[2]:.3f}] "
               f"{cq[1]:9.3f} [{cq[0]:.3f}-{cq[2]:.3f}] "
               f"{(cq[1] - bq[1]) / bq[1]:+7.1%} {wins:>2}/{args.pairs}  {verdict}")
+    correct = [(b, c) for b, c in zip(runs["base"], runs["change"])
+               if b and c and b["correct"] and c["correct"]]
+    kinds = sorted({k for b, c in correct for k in kind_latencies(b).keys() & kind_latencies(c).keys()})
+    if kinds:
+        print(f"\np50 latency per statement kind (s; the median of the runs' p50s)")
+        width = max(10, *map(len, kinds))
+        print(f"{'kind':{width}} {'base':>9} {'change':>9} {'delta':>7} {'wins':>6}")
+        for kind in kinds:
+            pairs = [(kind_latencies(b)[kind], kind_latencies(c)[kind]) for b, c in correct
+                     if kind in kind_latencies(b) and kind in kind_latencies(c)]
+            bm = statistics.median(b for b, _ in pairs)
+            cm = statistics.median(c for _, c in pairs)
+            wins = sum(1 for b, c in pairs if c < b)
+            print(f"{kind:{width}} {bm:9.3f} {cm:9.3f} {(cm - bm) / bm:+7.1%} {wins:>2}/{len(pairs)}")
     print(f"pairs with steal above {STEAL_MARK:.0%}: "
           f"{', '.join(map(str, marked)) if marked else 'none'}")
     for side in ("base", "change"):

@@ -24,6 +24,18 @@ object GraftSession {
     * advisory size governs and this setting is inert. */
   private val MinCoalesceBytes: Long = 16384L
 
+  /** Artifact isolation off, for the sessions the engine derives from its
+    * own: a stream drain's clone ([[graft.streaming.Streams]]) and each
+    * connection session of the BI endpoint ([[graft.etl.BiServe]]). With
+    * isolation on (Spark 4.1's default) every session runs its tasks under
+    * its own artifact classloader, and generated code is cached by
+    * (classloader, source), so each new session compiles every plan shape
+    * again and runs it cold. The engine adds no session artifacts (no
+    * `addArtifact`), so a derived session loses nothing by sharing the
+    * default classloader and its code cache. */
+  val SharedCodeCache: (String, String) =
+    "spark.sql.artifact.isolation.enabled" -> "false"
+
   def apply(cpus: Int): SparkSession = {
     // Pin the JVM default zone too: driver-side java.sql.Timestamp
     // construction must agree with the UTC-pinned session.
@@ -39,6 +51,9 @@ object GraftSession {
       // engine runs — the queries are verified and timed WITH them on.
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", false)
+      // `file:` paths: chmod through NIO, not one forked process per file
+      // and directory Hadoop creates (see NioLocalFileSystem).
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .getOrCreate()
   }
 

@@ -5,7 +5,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.hive.service.cli.thrift.ThriftCLIService
 import org.apache.hive.service.server.HiveServer2
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.SessionDefaults
 import org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
+
+import graft.GraftSession
 
 /** Live BI serving endpoint (SURVEY.md §3.3 — the Metabase entry point).
   *
@@ -23,9 +26,16 @@ import org.apache.spark.sql.hive.thriftserver.HiveThriftServer2
   * data movement of its own beyond result collection to the driver, which
   * is the same contract every BI connection to every warehouse has.
   *
-  * Each JDBC connection gets an isolated child session (separate SQLConf /
-  * temp views) over the shared catalog, matching warehouse semantics:
-  * serve CATALOG tables, not session temp views.
+  * Each JDBC connection gets its own child session over the shared
+  * catalog: temp views, SQLConf and `SET` stay per connection, matching
+  * warehouse semantics (serve CATALOG tables, not session temp views).
+  * The connections do share compiled code: [[start]] gives their sessions
+  * [[graft.GraftSession.SharedCodeCache]]. With an artifact classloader
+  * per session, every connection compiled every statement shape again
+  * before its first run of it. Sharing the classloader also shares jars
+  * added with `ADD JAR`, as on Spark 3's Thrift server, which had no
+  * session isolation; the engine serves SQL over its catalog and adds no
+  * session artifacts of its own.
   */
 object BiServe {
 
@@ -51,13 +61,20 @@ object BiServe {
 
   /** Start the Thrift JDBC server inside `spark`. `port = 0` binds an
     * ephemeral free port (the bound port is read back from the CLI
-    * service, mirroring how Spark's own thriftserver tests resolve it). */
+    * service, mirroring how Spark's own thriftserver tests resolve it).
+    * The server reads its port and host from the session conf when it
+    * starts; they are set for the start only, so `spark`'s conf is left
+    * as it was. The connection sessions' shared code cache is a default
+    * of the sessions derived from `spark` ([[SessionDefaults]]). */
   def start(spark: SparkSession, port: Int = 0,
       host: String = "localhost"): Endpoint = {
-    spark.conf.set("hive.server2.thrift.port", port.toString)
-    spark.conf.set("hive.server2.thrift.bind.host", host)
-    val server = HiveThriftServer2.startWithSparkSession(spark,
-      exitOnError = false)
+    val (key, value) = GraftSession.SharedCodeCache
+    SessionDefaults.set(spark, key, value)
+    val server = GraftSession.withConfs(spark, Seq(
+        "hive.server2.thrift.port" -> port.toString,
+        "hive.server2.thrift.bind.host" -> host)) {
+      HiveThriftServer2.startWithSparkSession(spark, exitOnError = false)
+    }
     val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
     var bound = 0
     while (bound == 0 && System.nanoTime() < deadline) {

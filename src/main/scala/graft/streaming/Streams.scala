@@ -120,13 +120,10 @@ object Streams {
     * `finally`) the session carries `confs` plus [[drainConfs]], which
     * remove two fixed costs every drain otherwise pays:
     *
-    * - `spark.sql.artifact.isolation.enabled=false`. A streaming query
-    *   runs on a clone of the session, and with isolation on (Spark 4.1's
-    *   default) each clone gets its own artifact classloader. Generated
-    *   code is cached by (classloader, source), so every drain recompiled
-    *   its whole plan (14 classes for a warm q34) and ran it cold. The
-    *   engine adds no session artifacts (no addArtifact/addJar), so the
-    *   clone loses nothing by sharing the parent's classloader.
+    * - [[GraftSession.SharedCodeCache]]. A streaming query runs on a
+    *   clone of the session; with its own artifact classloader every drain
+    *   recompiled its whole plan (14 classes for a warm q34) and ran it
+    *   cold.
     * - `spark.sql.streaming.checkpointFileManagerClass` set to
     *   `FileSystemBasedCheckpointFileManager`, only for a local checkpoint
     *   (see [[drainConfs]]). Spark's default manager renames through
@@ -163,7 +160,7 @@ object Streams {
       .orElse(spark.conf.getOption("spark.sql.streaming.checkpointLocation"))
       .flatMap(d => Option(new Path(d).toUri.getScheme))
       .getOrElse(FileSystem.getDefaultUri(spark.sparkContext.hadoopConfiguration).getScheme)
-    val isolation = Seq("spark.sql.artifact.isolation.enabled" -> "false")
+    val isolation = Seq(GraftSession.SharedCodeCache)
     if (scheme != "file") isolation
     else isolation :+ ("spark.sql.streaming.checkpointFileManagerClass" ->
       classOf[FileSystemBasedCheckpointFileManager].getName)

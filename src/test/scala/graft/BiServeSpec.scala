@@ -140,4 +140,47 @@ class BiServeSpec extends AnyFunSuite {
       } finally { c1.close(); c2.close() }
     } finally endpoint.stop()
   }
+
+  test("a statement compiled on one connection compiles nothing on a second connection") {
+    // Each connection's session shares the default code cache, so a
+    // dashboard statement compiles once per endpoint, not per connection.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // The literal lands in the generated source, so no earlier run in this
+    // JVM has compiled this shape.
+    val nonce = 2 + System.nanoTime() % 1000003L
+    val sql = s"SELECT id % 13 AS k, count(*) AS n, sum(id * $nonce) AS s " +
+      "FROM range(0, 20000, 1, 4) GROUP BY id % 13 ORDER BY k"
+    val endpoint = BiServe.start(spark)
+    try {
+      Class.forName("org.apache.hive.jdbc.HiveDriver")
+      val c1 = DriverManager.getConnection(endpoint.jdbcUrl, "", "")
+      val c2 = DriverManager.getConnection(endpoint.jdbcUrl, "", "")
+      try {
+        def firstRun(c: java.sql.Connection): (Vector[(Long, Long, Long)], Long) = {
+          val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          val rs = c.createStatement().executeQuery(sql)
+          val rows = Iterator.continually(rs).takeWhile(_.next())
+            .map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toVector
+          (rows, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before)
+        }
+        val (rows1, compiled1) = firstRun(c1)
+        val (rows2, compiled2) = firstRun(c2)
+        assert(compiled1 > 0, "the first connection's run compiled nothing")
+        assert(rows1.size == 13 && rows2 == rows1)
+        assert(compiled2 == 0,
+          s"the second connection compiled $compiled2 classes the first had compiled")
+      } finally { c1.close(); c2.close() }
+    } finally endpoint.stop()
+  }
+
+  test("starting the endpoint leaves the host session's conf unchanged") {
+    val before = spark.conf.getAll
+    // a bind host the earlier endpoints in this suite did not use
+    val endpoint = BiServe.start(spark, host = "127.0.0.1")
+    try {
+      val after = spark.conf.getAll.toSet
+      val changed = (after diff before.toSet) ++ (before.toSet diff after)
+      assert(changed.isEmpty, s"start changed the host conf: $changed")
+    } finally endpoint.stop()
+  }
 }

@@ -695,17 +695,17 @@ class StreamingSpec extends AnyFunSuite {
   test("only a local checkpoint gets the filesystem checkpoint manager") {
     import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
     val manager = "spark.sql.streaming.checkpointFileManagerClass"
-    val isolation = "spark.sql.artifact.isolation.enabled"
+    val (isolation, off) = GraftSession.SharedCodeCache
     for (d <- Seq(Some("/tmp/ckpt"), Some("file:/tmp/ckpt"), None)) {
       val confs = Streams.drainConfs(spark, d).toMap
       assert(confs.get(manager).contains(
         classOf[FileSystemBasedCheckpointFileManager].getName), s"$d")
-      assert(confs.get(isolation).contains("false"), s"$d")
+      assert(confs.get(isolation).contains(off), s"$d")
     }
     for (d <- Seq("s3a://bucket/ckpt", "hdfs://namenode:8020/ckpt")) {
       val confs = Streams.drainConfs(spark, Some(d)).toMap
       assert(!confs.contains(manager), s"$d must keep Spark's default manager")
-      assert(confs.get(isolation).contains("false"), d)
+      assert(confs.get(isolation).contains(off), d)
     }
   }
 
