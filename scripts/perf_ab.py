@@ -137,12 +137,12 @@ def main():
           "change working tree")
     print(f"{'metric':10} {'base median [q1-q3]':>26} {'change median [q1-q3]':>26} "
           f"{'delta':>7} {'wins':>6}  verdict")
+    correct = [(b, c) for b, c in zip(runs["base"], runs["change"])
+               if b and c and b["correct"] and c["correct"]]
     for m in end_to_end:
         name, lower = m["name"], m["better"] == "lower"
         pairs = [(b["metrics"][name]["value"], c["metrics"][name]["value"])
-                 for b, c in zip(runs["base"], runs["change"])
-                 if b and c and b["correct"] and c["correct"]
-                 and name in b["metrics"] and name in c["metrics"]]
+                 for b, c in correct if name in b["metrics"] and name in c["metrics"]]
         if not pairs:
             continue
         base, change = [b for b, _ in pairs], [c for _, c in pairs]
@@ -163,16 +163,14 @@ def main():
         print(f"{name:10} {bq[1]:9.3f} [{bq[0]:.3f}-{bq[2]:.3f}] "
               f"{cq[1]:9.3f} [{cq[0]:.3f}-{cq[2]:.3f}] "
               f"{(cq[1] - bq[1]) / bq[1]:+7.1%} {wins:>2}/{args.pairs}  {verdict}")
-    correct = [(b, c) for b, c in zip(runs["base"], runs["change"])
-               if b and c and b["correct"] and c["correct"]]
-    kinds = sorted({k for b, c in correct for k in kind_latencies(b).keys() & kind_latencies(c).keys()})
+    by_kind = [(kind_latencies(b), kind_latencies(c)) for b, c in correct]
+    kinds = sorted({k for b, c in by_kind for k in b.keys() & c.keys()})
     if kinds:
-        print(f"\np50 latency per statement kind (s; the median of the runs' p50s)")
+        print("\np50 latency per statement kind (s; the median of the runs' p50s)")
         width = max(10, *map(len, kinds))
         print(f"{'kind':{width}} {'base':>9} {'change':>9} {'delta':>7} {'wins':>6}")
         for kind in kinds:
-            pairs = [(kind_latencies(b)[kind], kind_latencies(c)[kind]) for b, c in correct
-                     if kind in kind_latencies(b) and kind in kind_latencies(c)]
+            pairs = [(b[kind], c[kind]) for b, c in by_kind if kind in b and kind in c]
             bm = statistics.median(b for b, _ in pairs)
             cm = statistics.median(c for _, c in pairs)
             wins = sum(1 for b, c in pairs if c < b)

@@ -2,11 +2,10 @@ package graft
 
 import java.io.FileNotFoundException
 import java.nio.file.{Files, NoSuchFileException}
-import java.nio.file.attribute.PosixFilePermission
-import java.nio.file.attribute.PosixFilePermission._
+import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.{FsAction, FsPermission}
+import org.apache.hadoop.fs.permission.FsPermission
 
 /** The `file:` filesystem [[GraftSession]] installs
   * (`spark.hadoop.fs.file.impl`): Hadoop's checksummed `LocalFileSystem`
@@ -38,17 +37,9 @@ object NioLocalFileSystem {
       }
   }
 
-  private def posix(p: FsPermission): java.util.Set[PosixFilePermission] = {
-    val bits = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-    def add(a: FsAction, r: PosixFilePermission, w: PosixFilePermission,
-        x: PosixFilePermission): Unit = {
-      if (a.implies(FsAction.READ)) bits.add(r)
-      if (a.implies(FsAction.WRITE)) bits.add(w)
-      if (a.implies(FsAction.EXECUTE)) bits.add(x)
-    }
-    add(p.getUserAction, OWNER_READ, OWNER_WRITE, OWNER_EXECUTE)
-    add(p.getGroupAction, GROUP_READ, GROUP_WRITE, GROUP_EXECUTE)
-    add(p.getOtherAction, OTHERS_READ, OTHERS_WRITE, OTHERS_EXECUTE)
-    bits
-  }
+  /** The `rwxr-x---` form of `p`'s user, group and other bits. (Not
+    * `p.toString`: the `FsCreateModes` a create passes prints both its
+    * masked and unmasked modes.) */
+  private def posix(p: FsPermission) = PosixFilePermissions.fromString(
+    Seq(p.getUserAction, p.getGroupAction, p.getOtherAction).map(_.SYMBOL).mkString)
 }

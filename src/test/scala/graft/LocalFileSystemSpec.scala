@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.permission.{FsCreateModes, FsPermission}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.Pipeline
@@ -76,6 +76,11 @@ class LocalFileSystemSpec extends AnyFunSuite {
       fs.setPermission(new Path(f.toUri), new FsPermission(Integer.parseInt("640", 8).toShort)))
     assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(f)) == "rw-r-----")
     assert(started.isEmpty, s"setPermission forked $started")
+    // a create's mode: the umask-masked bits apply
+    fs.setPermission(new Path(f.toUri), FsCreateModes.applyUMask(
+      new FsPermission(Integer.parseInt("666", 8).toShort),
+      new FsPermission(Integer.parseInt("022", 8).toShort)))
+    assert(PosixFilePermissions.toString(Files.getPosixFilePermissions(f)) == "rw-r--r--")
     // the sticky bit has no NIO form: Hadoop's own chmod sets it
     val sticky = new FsPermission(Integer.parseInt("1755", 8).toShort)
     fs.setPermission(new Path(dir.toUri), sticky)
